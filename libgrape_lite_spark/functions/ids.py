@@ -35,6 +35,11 @@ VERTEX_SCHEMA = StructType(
     [StructField("id", LongType(), False), StructField("oid", StringType(), False)]
 )
 
+# monotonically_increasing_id keeps the row count within a partition in
+# its low 33 bits; a partition holding this many rows would carry into the
+# partition-id bits and silently hand out duplicate ids.
+MAX_PARTITION_ROWS = 1 << 33
+
 
 def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """DataFrame with column ``oid`` → dictionary DataFrame(id, oid),
@@ -54,6 +59,9 @@ def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataF
     cached partitions already have — was elided by reading the position
     out of the row id (plan: assignment pass = scan + project +
     broadcast join, 0 exchanges, 0 sorts).
+
+    Raises ``ValueError`` when a partition holds :data:`MAX_PARTITION_ROWS`
+    or more oids — past that the row-id layout cannot encode the position.
     """
     spark = oids.sparkSession
     n = num_partitions or spark.sparkContext.defaultParallelism
@@ -75,6 +83,13 @@ def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataF
         .collect()
     )
     count_by_pid = {r["pid"]: r["count"] for r in counts}
+    for pid, cnt in sorted(count_by_pid.items()):
+        if cnt >= MAX_PARTITION_ROWS:
+            raise ValueError(
+                f"encode_vertices: partition {pid} holds {cnt} distinct oids, "
+                f"at or past the {MAX_PARTITION_ROWS}-row limit of the row-id "
+                f"layout; pass a larger num_partitions (now {n})"
+            )
     offsets: list[tuple[int, int]] = []
     acc = 0
     for pid in range(max(count_by_pid, default=-1) + 1):

@@ -1,11 +1,5 @@
 from libgrape_lite_spark.operators.wcc import wcc
-from libgrape_lite_spark.operators.pagerank import (
-    pagerank,
-    pagerank_auto,
-    pagerank_local,
-    pagerank_local_parallel,
-    pagerank_parallel,
-)
+from libgrape_lite_spark.operators.pagerank import pagerank, pagerank_local
 from libgrape_lite_spark.operators.bfs import bfs
 from libgrape_lite_spark.operators.sssp import sssp
 from libgrape_lite_spark.operators.cdlp import cdlp
@@ -14,10 +8,7 @@ from libgrape_lite_spark.operators.lcc import lcc
 __all__ = [
     "wcc",
     "pagerank",
-    "pagerank_auto",
     "pagerank_local",
-    "pagerank_local_parallel",
-    "pagerank_parallel",
     "bfs",
     "sssp",
     "cdlp",

@@ -40,7 +40,6 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libgrape_lite_spark.functions.edges import undirected
 from libgrape_lite_spark.plans.kernels import graph_op
 from libgrape_lite_spark.plans.superstep import IterationDriver
 from libgrape_lite_spark.session import static_plans
@@ -55,23 +54,11 @@ def pagerank(
     directed: bool = False,
     tol: float | None = None,
     driver: IterationDriver | None = None,
-    impl: str = "dataframe",
-    num_fragments: int | None = None,
     hub_salts: int | str = "auto",
     hub_degree_factor: float = 8.0,
     min_hub_degree: int = 1_000_000,
 ) -> DataFrame:
     """Returns DataFrame(id: long, rank: double).
-
-    ``impl``:
-      * ``"dataframe"`` — pure join + groupBy supersteps (Catalyst picks
-        broadcast vs shuffled join; best when state broadcasts).
-      * ``"kernel"`` — per-fragment Arrow gather-scatter over
-        hash-co-partitioned edge blocks (plans/kernels.py): NumPy
-        ``searchsorted`` lookup + ``bincount`` pre-combine per fragment,
-        shuffle only per-fragment partial sums — the CSR-fragment path of
-        the reference (SURVEY.md §4.5), best when state exceeds the
-        broadcast threshold.
 
     ``hub_salts`` — two-level salted gather (SURVEY.md §4.4, the skew
     fix the reference's Rebalancer approximates): contributions are first
@@ -92,40 +79,24 @@ def pagerank(
     callers with known in-degree hubs should pass an explicit int. The
     verdict is observable at ``driver.info["pagerank_hub_salts"]``.
     """
-    if impl not in ("dataframe", "kernel"):
-        raise ValueError(f"impl must be dataframe|kernel, got {impl!r}")
     if not (hub_salts == "auto" or isinstance(hub_salts, int)):
         raise ValueError(f"hub_salts must be an int or 'auto', got {hub_salts!r}")
     spark = vertices.sparkSession
     drv = driver or IterationDriver(spark)
 
     with static_plans(spark):
-        from libgrape_lite_spark.plans.kernels import cached_degree_table, cached_prepared
+        from libgrape_lite_spark.plans.kernels import (
+            cached_degree_table,
+            gather_adjacency_table,
+        )
 
-        if impl == "kernel":
-            from libgrape_lite_spark.plans.kernels import gather_scatter, partition_edges
-
-            nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-            def _build_kernel_adj() -> DataFrame:
-                a = (
-                    edges.select("src", "dst")
-                    if directed
-                    else undirected(edges.select("src", "dst"))
-                )
-                return partition_edges(a, nf).localCheckpoint(eager=True)
-
-            adj = cached_prepared(edges, ("pr_kernel", nf, directed), _build_kernel_adj)
-        else:
-            # pre-partition by the gather join key once — shared across
-            # pagerank calls on this edge table (fixed-round + convergence
-            # runs build it once); supersteps then shuffle only
-            # vertex-sized data (state join + groupBy combine). Layout +
-            # serialized-storage rationale: plans/kernels.py
-            # gather_adjacency_table.
-            from libgrape_lite_spark.plans.kernels import gather_adjacency_table
-
-            adj = gather_adjacency_table(edges, "src", directed)
+        # pre-partition by the gather join key once — shared across
+        # pagerank calls on this edge table (fixed-round + convergence
+        # runs build it once); supersteps then shuffle only
+        # vertex-sized data (state join + groupBy combine). Layout +
+        # serialized-storage rationale: plans/kernels.py
+        # gather_adjacency_table.
+        adj = gather_adjacency_table(edges, "src", directed)
 
         n = vertices.count()
         p = 1.0 / n
@@ -168,9 +139,7 @@ def pagerank(
             base = (1.0 - d) / n + d * dangling_sum / n
             dangling_sum = base * n_dangling
 
-            if impl == "kernel":
-                gathered = gather_scatter(adj, state, "r", nf, reduce_fn="sum")
-            elif hub_salts > 0:
+            if hub_salts > 0:
                 contrib = adj.join(
                     state.select(F.col("id").alias("src"), "r"), "src"
                 ).select(
@@ -313,47 +282,3 @@ def pagerank_local(
 
     drv.finish()
     return state.select("id", F.col("r").alias("rank"))
-
-
-def pagerank_auto(
-    vertices: DataFrame,
-    edges: DataFrame,
-    damping: float = 0.85,
-    max_rounds: int = 10,
-    directed: bool = False,
-    **kwargs,
-) -> DataFrame:
-    """PageRankAuto parity (pagerank_auto.h:47-121): the auto-parallel
-    rendition of the SAME fixpoint as the LDBC app — identical init
-    (p/outdeg, dangling p), identical round
-    (``base = (1-d)/|V| + d·dangling/|V|``; pull over the incoming
-    adjacency; divide by out-degree), identical multiply-back after the
-    final round (verified line-by-line against pagerank_auto.h IncEval).
-    The reference variants differ only in MESSAGING machinery (auto sync
-    buffers vs explicit batch shuffle), which Spark's shuffle subsumes —
-    so this delegates to :func:`pagerank` and exists for API parity."""
-    return pagerank(
-        vertices, edges, damping=damping, max_rounds=max_rounds,
-        directed=directed, **kwargs,
-    )
-
-
-def pagerank_parallel(vertices: DataFrame, edges: DataFrame, **kwargs) -> DataFrame:
-    """PageRankParallel parity (pagerank_parallel.h:63-204): same fixpoint
-    as the LDBC app — same init, round recurrence (base/dangling scalars,
-    pull over incoming adjacency, divide by out-degree) and multiply-back —
-    differing only in intra-fragment threading (``ForEach`` over vertex
-    chunks) and message batching, both of which Spark's task parallelism
-    and shuffle subsume. Delegates to :func:`pagerank`; exists so every
-    reference app name resolves."""
-    return pagerank(vertices, edges, **kwargs)
-
-
-def pagerank_local_parallel(
-    vertices: DataFrame, edges: DataFrame, **kwargs
-) -> DataFrame:
-    """PageRankLocalParallel parity (pagerank_local_parallel.h:57-214):
-    the GeminiGraph ``1-d+d·Σ`` formulation of :func:`pagerank_local` with
-    the reference's thread-parallel messaging machinery, which Spark
-    subsumes. Delegates to :func:`pagerank_local`; exists for API parity."""
-    return pagerank_local(vertices, edges, **kwargs)

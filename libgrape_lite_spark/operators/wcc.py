@@ -33,7 +33,6 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libgrape_lite_spark.functions.edges import undirected
 from libgrape_lite_spark.plans.kernels import push_adjacency_table
 from libgrape_lite_spark.plans.kernels import graph_op
 from libgrape_lite_spark.plans.superstep import IterationDriver
@@ -76,22 +75,18 @@ def wcc(
         (min-propagation is monotone and earlier sends are permanent);
         the switch only trades frontier-filter overhead against full-pass
         cost, exactly the reference's trade.
-      * ``"kernel"`` — per-fragment Arrow gather-scatter (reduce_fn="min",
-        long-typed end-to-end; exact past 2^53 vertex ids).
       * ``"twostar"`` — large-star/small-star alternation (Kiveris et al.,
         SoCC'14): O(log² V) rounds independent of graph DIAMETER — the
         escape hatch for path-/mesh-like graphs where every other impl
         needs O(diameter) (or O(cross-fragment diameter)) supersteps.
     """
-    if impl not in ("dataframe", "kernel", "auto", "twostar"):
-        raise ValueError(f"impl must be dataframe|kernel|auto|twostar, got {impl!r}")
+    if impl not in ("dataframe", "auto", "twostar"):
+        raise ValueError(f"impl must be dataframe|auto|twostar, got {impl!r}")
     spark = vertices.sparkSession
     drv = driver or IterationDriver(spark)
 
-    if impl == "kernel":
-        return _wcc_kernel(vertices, edges, drv, max_rounds, num_fragments)
     if impl == "auto":
-        return _wcc_kernel_auto(vertices, edges, drv, max_rounds, num_fragments)
+        return _wcc_auto(vertices, edges, drv, max_rounds, num_fragments)
     if impl == "twostar":
         return _wcc_two_star(vertices, edges, drv, max_rounds)
 
@@ -271,61 +266,7 @@ def _wcc_two_star(
     return out
 
 
-def _wcc_kernel(
-    vertices: DataFrame,
-    edges: DataFrame,
-    drv: IterationDriver,
-    max_rounds: int | None,
-    num_fragments: int | None,
-) -> DataFrame:
-    """Min-propagation over hash-co-partitioned fragments — every superstep
-    runs the NumPy gather kernel (ufunc.minimum.at per fragment, the
-    atomic_min analog, atomic_ops.h:49-68) and shuffles only per-fragment
-    minima. Long-typed end-to-end: component labels are vertex ids and
-    never pass through double (exact past 2^53)."""
-    import time as _time
-
-    from libgrape_lite_spark.plans.kernels import gather_scatter, partition_edges
-    from libgrape_lite_spark.session import static_plans
-
-    spark = vertices.sparkSession
-    with static_plans(spark):
-        nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        adj = (
-            undirected(edges.select("src", "dst"))
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
-        adj = partition_edges(adj, nf).localCheckpoint(eager=True)
-
-        step = 0
-        state = drv.materialize(
-            vertices.select("id", F.col("id").alias("comp")), step
-        )
-        while max_rounds is None or step < max_rounds:
-            t0 = _time.time()
-            step += 1
-            nbr_min = gather_scatter(
-                adj, state, "comp", nf, reduce_fn="min", value_dtype="long"
-            )
-            new_state = state.join(nbr_min, "id", "left").select(
-                "id",
-                F.least("comp", F.coalesce("gathered", "comp")).alias("comp"),
-                (F.col("gathered") < F.col("comp")).alias("changed"),
-            )
-            state, m = drv.materialize_observed(
-                new_state, step, F.count(F.when(F.col("changed"), True)).alias("active")
-            )
-            active = m["active"]
-            drv.log(step, active, _time.time() - t0, op="wcc_kernel")
-            if active == 0:
-                break
-
-    drv.finish()
-    return state.select("id", "comp")
-
-
-def _wcc_kernel_auto(
+def _wcc_auto(
     vertices: DataFrame,
     edges: DataFrame,
     drv: IterationDriver,

@@ -1,27 +1,28 @@
-"""Per-partition gather-scatter kernels (the CSR-fragment compute path).
+"""Per-fragment kernels and the prepared graph layouts they run over.
 
 The reference's per-fragment compute is a scan over a local CSR with
 atomic reductions (ImmutableCSR, grape/graph/immutable_csr.h; atomic_min/
-add, grape/utils/atomic_ops.h). The Spark-native equivalent implemented
-here:
+add, grape/utils/atomic_ops.h). The Spark-native equivalent here is a
+``cogroup(edges_by_part, state_by_part).applyInPandas`` running a NumPy
+kernel per fragment, Arrow-batched with no per-row Python:
 
-* the edge table is hash-partitioned by ``src`` into P *fragments*
-  (``part = pmod(hash(src), P)`` — HashPartitioner parity,
-  grape/fragment/partitioner.h:39-41);
-* vertex state is co-partitioned by ``id`` with the same function;
-* one superstep = ``cogroup(edges_by_part, state_by_part).applyInPandas``
-  running a NumPy kernel per fragment: map local src → state value
-  (sorted-id ``searchsorted``, the dense-lid lookup), then pre-aggregate
-  per destination with ``np.bincount`` over factorized dst codes — the
-  map-side combine the reference gets from per-fragment message dedup
-  (SURVEY.md §2.4) — then a narrow shuffle-reduce ``groupBy(dst)``
-  finishes cross-fragment sums.
+* :func:`local_min_fixpoint` (wcc) and :func:`local_relax_fixpoint`
+  (sssp, bfs) — the PIE partial evaluation behind ``impl="auto"``: each
+  range-partitioned fragment (:func:`edge_balanced_bounds`, Rebalancer
+  parity) runs its local fixpoint before anything shuffles and emits only
+  the values it improved;
+* :func:`gather_label_counts` — CDLP ``impl="kernel"``'s vote pre-count
+  over edges hash-partitioned by ``dst`` (:func:`partition_edges`, the
+  HashPartitioner parity of grape/fragment/partitioner.h:39-41).
 
-Shuffle volume per superstep: O(distinct dst per fragment), never O(E) —
-exactly the reference's "one message per (vertex, dest fragment)"
-guarantee (csr_edgecut_fragment_base.h:226-258).
+Each shuffles per-fragment partial results, never one row per edge — the
+reference's "one message per (vertex, dest fragment)" guarantee
+(csr_edgecut_fragment_base.h:226-258).
 
-Everything is Arrow-batched NumPy; no per-row Python.
+The rest of the module is the ``PrepareToRunApp`` analog: the edge
+layouts every operator gathers over (push/gather adjacencies, PIE
+fragment table, degree table), built once per edge table, memoized on it
+(:func:`cached_prepared`, :func:`prepare_graph`) and released together.
 """
 
 from __future__ import annotations
@@ -35,27 +36,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_REDUCERS = {
-    "sum": (np.add, 0.0),
-    "min": (np.minimum, np.inf),
-    "max": (np.maximum, -np.inf),
-}
-
-# exact long-typed path: vertex-id-valued state (WCC component labels) must
-# never round-trip through double — exact only below 2^53, silently wrong at
-# the 10^12-vertex posture. Long reducers use int64 sentinels.
-_REDUCERS_LONG = {
-    "sum": (np.add, 0),
-    "min": (np.minimum, np.iinfo(np.int64).max),
-    "max": (np.maximum, np.iinfo(np.int64).min),
-}
-
 
 def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> DataFrame:
     """Assign each edge to its ``key``-endpoint's fragment and co-locate —
     the one-time `PrepareToRunApp` stage; cache the result across
-    supersteps. ``key="src"`` for gathers that read source state (PR, WCC
-    push); ``key="dst"`` for gathers that read destination state (CDLP
+    supersteps. ``key="src"`` for gathers that read source state;
+    ``key="dst"`` for gathers that read destination state (CDLP
     out-adjacency votes).
 
     Sorted by ``part`` within partitions: every consumer is a
@@ -70,65 +56,6 @@ def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> D
 
 def partition_state(state: DataFrame, num_fragments: int) -> DataFrame:
     return state.withColumn("part", F.pmod(F.hash("id"), F.lit(num_fragments)))
-
-
-def gather_scatter(
-    edges_p: DataFrame,
-    state: DataFrame,
-    value_col: str,
-    num_fragments: int,
-    reduce_fn: str = "sum",
-    weight_col: str | None = None,
-    value_dtype: str = "double",
-) -> DataFrame:
-    """One message superstep: for every edge (v→u), send
-    ``state[v].value (op weight)`` to u; combine with ``reduce_fn``.
-
-    Returns DataFrame(id, gathered). ``edges_p`` must come from
-    :func:`partition_edges` (and be cached by the caller).
-    ``value_dtype="long"`` keeps the whole path in int64 (id-valued state).
-    """
-    is_long = value_dtype == "long"
-    np_op, init = (_REDUCERS_LONG if is_long else _REDUCERS)[reduce_fn]
-    np_dtype = np.int64 if is_long else np.float64
-    use_weight = weight_col is not None
-
-    def kernel(key, edges_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if edges_pdf.empty or state_pdf.empty:
-            return pd.DataFrame({"id": np.array([], dtype=np.int64),
-                                 "gathered": np.array([], dtype=np_dtype)})
-        ids = state_pdf["id"].to_numpy(dtype=np.int64)
-        vals = state_pdf[value_col].to_numpy(dtype=np_dtype)
-        order = np.argsort(ids, kind="stable")
-        ids_sorted, vals_sorted = ids[order], vals[order]
-
-        src = edges_pdf["src"].to_numpy(dtype=np.int64)
-        dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
-        pos = np.searchsorted(ids_sorted, src)
-        # guard: srcs without state (shouldn't happen — same partitioner)
-        valid = (pos < len(ids_sorted)) & (ids_sorted[np.minimum(pos, len(ids_sorted) - 1)] == src)
-        pos, dst = pos[valid], dst[valid]
-        contrib = vals_sorted[pos]
-        if use_weight:
-            contrib = contrib + edges_pdf[weight_col].to_numpy(dtype=np_dtype)[valid]
-
-        # per-fragment combine: factorize dst → dense codes → bincount/reduceat
-        dst_unique, codes = np.unique(dst, return_inverse=True)
-        if reduce_fn == "sum" and not is_long:
-            partial = np.bincount(codes, weights=contrib, minlength=len(dst_unique))
-        else:
-            partial = np.full(len(dst_unique), init, dtype=np_dtype)
-            np_op.at(partial, codes, contrib)
-        return pd.DataFrame({"id": dst_unique, "gathered": partial})
-
-    state_p = partition_state(state.select("id", value_col), num_fragments)
-    partials = (
-        edges_p.groupBy("part")
-        .cogroup(state_p.groupBy("part"))
-        .applyInPandas(kernel, schema=f"id long, gathered {value_dtype}")
-    )
-    agg = {"sum": F.sum, "min": F.min, "max": F.max}[reduce_fn]
-    return partials.groupBy("id").agg(agg("gathered").alias("gathered"))
 
 
 def segment_part(col: str, num_fragments: int, id_bound: int):

@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -145,28 +144,14 @@ class IterationDriver:
         # materialize time (the plan is exactly one fresh LogicalRDD) and
         # free the grandparent with a single ``SparkContext.unpersistRDD``
         # py4j call — ~4 ms/round vs ~10 ms for the r6 per-release plan
-        # walk + useless cache-manager unpersist. SPARK_GRAFT_GC_MODE is
-        # a measurement knob for scripts/bench_pr_ab.py ONLY:
-        #   ids   (default) — by-id release, keep 2
-        #   keep2 — the r6-shipped release_pinned plan walk, keep 2
-        #   r5    — the round-5 behavior: df.unpersist() no-op, keep 1,
-        #           LEAKS every superstep block (paired-A/B control arm)
-        mode = os.environ.get("SPARK_GRAFT_GC_MODE", "ids")
+        # walk + useless cache-manager unpersist. States whose ids could
+        # not be captured fall back to that plan walk (release_pinned).
         from libgrape_lite_spark.plans.kernels import _pinned_rdd_ids, release_pinned
 
-        ids = tuple(_pinned_rdd_ids(keep)) if mode == "ids" else ()
-        self._persisted.append((keep, ids))
-        if mode == "r5":
-            while len(self._persisted) > 1:
-                old, _ = self._persisted.pop(0)
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            return
+        self._persisted.append((keep, tuple(_pinned_rdd_ids(keep))))
         while len(self._persisted) > 2:
             old, old_ids = self._persisted.pop(0)
-            if mode == "ids" and old_ids:
+            if old_ids:
                 self._unpersist_ids(old_ids)
             else:
                 release_pinned(old)
@@ -245,7 +230,3 @@ class IterationDriver:
             .write.mode("append")
             .parquet(self.metrics_path)
         )
-
-
-def timed() -> float:
-    return time.time()

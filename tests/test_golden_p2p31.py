@@ -114,20 +114,6 @@ def test_pagerank_undirected(spark, graph):
     )
 
 
-def test_pagerank_kernel_impl(spark, graph):
-    """Arrow gather-scatter fragment kernel (plans/kernels.py) must match
-    the golden output too (same math, different summation order)."""
-    from libgrape_lite_spark.operators import pagerank
-
-    v, e = graph
-    check_close(
-        pagerank(v, e, damping=0.85, max_rounds=10, directed=False, impl="kernel"),
-        "rank",
-        "p2p-31-PR",
-        rtol=1e-6,
-    )
-
-
 def test_pagerank_hub_salted(spark, graph):
     """Two-level salted gather (hub-skew protection) is result-identical."""
     from libgrape_lite_spark.operators import pagerank

@@ -1,55 +1,10 @@
-"""Fragment gather-scatter kernels (plans/kernels.py) vs DataFrame results."""
+"""Fragment kernels (plans/kernels.py) and alternative impls vs DataFrame results."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import make_edges, make_vertices
-
-
-def test_gather_scatter_sum_matches_join(spark):
-    from libgrape_lite_spark.plans.kernels import gather_scatter, partition_edges
-
-    e = make_edges(spark, [(i, (i * 3) % 50) for i in range(200)] + [(0, 1)] * 5)
-    state = spark.range(200).select(
-        F.col("id"), (F.col("id") * 0.5 + 1.0).alias("val")
-    )
-    want = {
-        r["id"]: r["g"]
-        for r in e.join(state.withColumnRenamed("id", "src"), "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.sum("val").alias("g"))
-        .collect()
-    }
-    ep = partition_edges(e, 4).localCheckpoint(eager=True)
-    got = {r["id"]: r["gathered"] for r in gather_scatter(ep, state, "val", 4).collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12)
-
-
-def test_gather_scatter_min(spark):
-    from libgrape_lite_spark.plans.kernels import gather_scatter, partition_edges
-
-    e = make_edges(spark, [(1, 3), (2, 3), (4, 3), (1, 5)])
-    state = spark.createDataFrame(
-        [(1, 9.0), (2, 4.0), (4, 7.0)], "id long, val double"
-    )
-    ep = partition_edges(e, 3).localCheckpoint(eager=True)
-    got = {r["id"]: r["gathered"] for r in
-           gather_scatter(ep, state, "val", 3, reduce_fn="min").collect()}
-    assert got == {3: 4.0, 5: 9.0}
-
-
-def test_wcc_kernel_equals_dataframe(spark):
-    from libgrape_lite_spark.operators import wcc
-
-    v = make_vertices(spark, range(20))
-    e = make_edges(spark, [(i, i + 1) for i in range(8)] + [(12, 13), (13, 14), (17, 18)])
-    a = {r["id"]: r["comp"] for r in wcc(v, e).collect()}
-    b = {r["id"]: r["comp"] for r in wcc(v, e, impl="kernel", num_fragments=4).collect()}
-    assert a == b
 
 
 def test_lcc_wedge_equals_intersect(spark):
@@ -80,20 +35,6 @@ def test_cdlp_kernel_equals_dataframe(spark):
     assert a == b
 
 
-def test_pagerank_kernel_equals_dataframe(spark):
-    from libgrape_lite_spark.operators import pagerank
-
-    v = make_vertices(spark, range(30))
-    e = make_edges(
-        spark, [(i, (i + 1) % 30) for i in range(30)] + [(i, (i * 7) % 30) for i in range(30)]
-    )
-    a = {r["id"]: r["rank"] for r in pagerank(v, e, max_rounds=6).collect()}
-    b = {r["id"]: r["rank"] for r in
-         pagerank(v, e, max_rounds=6, impl="kernel", num_fragments=4).collect()}
-    for k in a:
-        assert b[k] == pytest.approx(a[k], rel=1e-10)
-
-
 def test_wcc_auto_equals_dataframe(spark):
     """PIE local-fixpoint kernel (impl='auto') matches the join fixpoint on
     a multi-chain + cross-link graph (chains exercise the local collapse)."""
@@ -109,9 +50,10 @@ def test_wcc_auto_equals_dataframe(spark):
     assert got == want
 
 
-def test_wcc_kernel_long_ids_past_2_53(spark):
-    """Long-typed gather: component ids above 2^53 survive exactly (the
-    old double path would round them)."""
+@pytest.mark.parametrize("impl", ["auto", "dataframe", "twostar"])
+def test_wcc_long_ids_past_2_53(spark, impl):
+    """Component ids above 2^53 survive exactly in every impl (a path
+    through double would round them)."""
     from libgrape_lite_spark.operators import wcc
 
     base = (1 << 53) + 1  # odd; double would round to 2^53
@@ -119,20 +61,27 @@ def test_wcc_kernel_long_ids_past_2_53(spark):
     edges = [(base, base + 1)]
     v = spark.createDataFrame([(i,) for i in ids], "id long")
     e = spark.createDataFrame([(s, d, 1.0) for s, d in edges], "src long, dst long, weight double")
-    got = {r["id"]: r["comp"] for r in wcc(v, e, impl="kernel", num_fragments=2).collect()}
+    got = {r["id"]: r["comp"] for r in wcc(v, e, impl=impl, num_fragments=2).collect()}
     assert got == {base: base, base + 1: base, base + 3: base + 3}
 
 
 def test_wcc_jump_off_equals_on(spark):
+    """Pointer jumping (``jump``, a dataframe-impl option) changes only the
+    superstep count: same labels, fewer rounds on a long chain."""
     from libgrape_lite_spark.operators import wcc
+    from libgrape_lite_spark.plans.superstep import IterationDriver
     from tests.conftest import make_edges, make_vertices
 
     edges = [(i, i + 1) for i in range(0, 12)] + [(3, 20), (20, 21)]
     ids = sorted({x for e in edges for x in e})
     v, e = make_vertices(spark, ids), make_edges(spark, edges)
-    a = {r["id"]: r["comp"] for r in wcc(v, e, jump=True).collect()}
-    b = {r["id"]: r["comp"] for r in wcc(v, e, jump=False).collect()}
+    on, off = IterationDriver(spark), IterationDriver(spark)
+    a = {r["id"]: r["comp"] for r in
+         wcc(v, e, impl="dataframe", jump=True, driver=on).collect()}
+    b = {r["id"]: r["comp"] for r in
+         wcc(v, e, impl="dataframe", jump=False, driver=off).collect()}
     assert a == b
+    assert len(on.metrics) < len(off.metrics)
 
 
 def test_sssp_auto_equals_dataframe(spark):

@@ -267,16 +267,3 @@ def test_pagerank_local_vs_numpy_oracle(spark):
     gotu = as_dict(pagerank_local(v, e, max_rounds=7))
     for u in ids:
         assert gotu[u] == pytest.approx(wantu[u], abs=1e-12)
-
-
-def test_pagerank_auto_matches_ldbc_formulation(spark):
-    """pagerank_auto (pagerank_auto.h) is the same fixpoint as the LDBC
-    app — identical results by construction; pinned here so a future
-    divergence of the wrapper is caught."""
-    from libgrape_lite_spark.operators import pagerank, pagerank_auto
-
-    v = make_vertices(spark, [1, 2, 3, 4])
-    e = make_edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    a = as_dict(pagerank(v, e, max_rounds=6, directed=True))
-    b = as_dict(pagerank_auto(v, e, max_rounds=6, directed=True))
-    assert a == b

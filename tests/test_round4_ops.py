@@ -1,5 +1,5 @@
-"""Round-4 operator behaviors: auto hub-salting, parallel-app API parity,
-BFS max_rounds depth-bound semantics, WCC adaptive push/pull rounds."""
+"""Round-4 operator behaviors: auto hub-salting, BFS max_rounds
+depth-bound semantics, WCC adaptive push/pull rounds."""
 
 from __future__ import annotations
 
@@ -52,30 +52,6 @@ def test_pagerank_auto_hub_salting_stays_off_without_skew(spark):
     drv = IterationDriver(spark)
     pagerank(v, e, max_rounds=2, driver=drv).collect()
     assert drv.info["pagerank_hub_salts"] == 0
-
-
-# ------------------------------------- parallel-variant API parity
-def test_pagerank_parallel_aliases_match_base(spark):
-    """pagerank_parallel.h / pagerank_local_parallel.h differ from the base
-    apps only in messaging machinery Spark subsumes — the aliases must
-    reproduce the base impls exactly."""
-    from libgrape_lite_spark.operators import (
-        pagerank,
-        pagerank_local,
-        pagerank_local_parallel,
-        pagerank_parallel,
-    )
-
-    v = make_vertices(spark, range(6))
-    e = make_edges(spark, [(0, 1), (1, 2), (2, 3), (3, 0), (3, 4)])
-
-    base = as_dict(pagerank(v, e, max_rounds=4))
-    alias = as_dict(pagerank_parallel(v, e, max_rounds=4))
-    assert alias == base
-
-    base_l = as_dict(pagerank_local(v, e, max_rounds=4))
-    alias_l = as_dict(pagerank_local_parallel(v, e, max_rounds=4))
-    assert alias_l == base_l
 
 
 # --------------------------------------- BFS max_rounds is a depth bound

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -101,6 +102,17 @@ def test_encode_vertices_matches_enumerate_oracle_skewed(spark):
     got = {r["oid"]: r["id"] for r in encode_vertices(oids, num_partitions=7).collect()}
     expected = {s: i for i, s in enumerate(sorted(set(raw)))}
     assert got == expected
+
+
+def test_encode_vertices_refuses_partition_past_row_id_limit(spark, monkeypatch):
+    """A partition at the row-id layout's per-partition limit must raise,
+    not wrap into the partition-id bits (limit shrunk to force it)."""
+    from libgrape_lite_spark.functions import ids
+
+    monkeypatch.setattr(ids, "MAX_PARTITION_ROWS", 10)
+    oids = spark.createDataFrame([(f"v{i:04d}",) for i in range(100)], "oid string")
+    with pytest.raises(ValueError, match=r"partition \d+ holds \d+ .*num_partitions"):
+        ids.encode_vertices(oids, num_partitions=2)
 
 
 def test_encode_edges_shuffle_dict_matches_broadcast(spark):
