@@ -15,8 +15,8 @@ with zero code change; sub-2× round-over-round comparisons were blind.
 Protocol (fixed in round 5, VERDICT r4 items 1+3): the timed
 ``graph_build`` step prebuilds EVERY shared prepared layout via
 ``plans.kernels.prepare_graph`` — fragment bounds, PIE fragment table,
-both push adjacencies, both gather adjacencies, degree table, CDLP kernel
-layout. Each per-operator number therefore measures supersteps only and
+both push adjacencies, both gather adjacencies and the degree table.
+Each per-operator number therefore measures supersteps only and
 is comparable in any order (previously the first caller of a layout
 absorbed its build). Every invocation also writes its full raw result —
 machine-clock timestamps included — to ``BENCH/runs/bench_<epoch>.json``;
@@ -83,11 +83,11 @@ def main() -> None:
 
     shuffle_parts = tune_shuffle_partitions(spark, 2 * n_edges, max_partitions=CPUS)
     # PrepareToRunApp-once: ALL shared layouts (bounds, PIE fragment,
-    # push x2, gather x2, degree, CDLP kernel) are built here, inside the
+    # push x2, gather x2, degree) are built here, inside the
     # timed build step, so every per-operator time below measures
     # supersteps only and comparisons are order-independent.
     t_prep0 = time.time()
-    prepare_graph(vertices, edges, num_fragments=shuffle_parts, kernel=True)
+    prepare_graph(vertices, edges, num_fragments=shuffle_parts)
     t_prep = time.time() - t_prep0
     t_build = time.time() - t0
 
@@ -141,13 +141,7 @@ def main() -> None:
     timed("wcc", lambda: wcc(vertices, edges))  # default impl = auto (PIE)
     timed("wcc_dataframe", lambda: wcc(vertices, edges, impl="dataframe"))
     timed("cdlp", lambda: cdlp(vertices, edges, max_rounds=10))
-    timed("cdlp_kernel", lambda: cdlp(vertices, edges, max_rounds=10, impl="kernel"))
-    # default impl = auto (PIE) since r06 — settled by the paired
-    # interleaved A/B protocol (scripts/bench_bfs_ab.py; raw run
-    # BENCH/runs/bfs_ab_1787008317.json: auto won 10/12 pairs, median
-    # paired delta 0.271 s); bfs_push keeps the dataframe impl on record
     timed("bfs", lambda: bfs(vertices, edges, source=source_id))
-    timed("bfs_push", lambda: bfs(vertices, edges, source=source_id, impl="dataframe"))
     timed("sssp", lambda: sssp(vertices, edges, source=source_id))
     timed("sssp_auto", lambda: sssp(vertices, edges, source=source_id, impl="auto"))
     timed("lcc", lambda: lcc(vertices, edges))

@@ -155,7 +155,7 @@ def _key_undirected(key: tuple) -> bool:
     kind = key[0]
     if kind == "push":
         return not key[1]
-    if kind in ("gather", "gather_dst_kernel"):
+    if kind == "gather":
         return not key[2]
     if kind == "pie":
         return not key[3]
@@ -331,35 +331,6 @@ def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_sur
             # keep the build's part-sorted property (cogroup sort elision)
             repartition=lambda df: df.repartition(nf, "part").sortWithinPartitions("part"),
         )
-    if kind == "gather_dst_kernel":
-        nf, directed, salts = key[1], key[2], key[3]
-        touched, del_rm = _route(directed, adds)
-        if salts > 1:
-            part_expr = F.pmod(
-                F.hash("dst", F.pmod(F.hash("src"), F.lit(salts))), F.lit(nf)
-            )
-        else:
-            part_expr = F.pmod(F.hash("dst"), F.lit(nf))
-
-        def thunk():
-            old = val.select("src", "dst", "part")
-            survive = _apply_removals(old, directed, vids, del_rm)
-            if touched is None:
-                return survive.localCheckpoint(eager=True)
-            survive = survive.join(F.broadcast(touched), ["src", "dst"], "left_anti")
-            m = merged.select("src", "dst").join(
-                F.broadcast(touched), ["src", "dst"], "left_semi"
-            )
-            rec = _doubled(m, directed).withColumn("part", part_expr)
-            # keep the build's part-sorted property (cogroup sort elision)
-            return (
-                survive.unionByName(rec)
-                .repartition(nf, "part")
-                .sortWithinPartitions("part")
-                .localCheckpoint(eager=True)
-            )
-
-        return thunk
     return None
 
 

@@ -6,36 +6,22 @@ newly reached vertices; messages carry no payload (EmptyType, bfs.h:111-117)
 — the level counter lives in the driver. Unreached vertices output
 ``int64 max`` (bfs_auto_context.h:44; golden p2p-31-BFS-directed).
 
-The reference's bottom-up/top-down direction switching (bfs.h:126-178) is
-re-expressed as a *dense-round switch*: push rounds run while the frontier
-is sparse; once it exceeds ``dense_fraction``·|V| (or persists past
-``switch_rounds`` — the deep-graph case), the remaining levels finish with
-the seeded unit-weight PIE kernel (one-two whole-graph local-fixpoint
-passes) — the same sparse→dense trade, identical results.
-
-Spark plan per superstep:
-    next = frontier ⋈ edges on src → distinct(dst)
-           ▷ visited_compacted (hash-partitioned anti-join, no re-exchange)
-           ▷ recent frontiers (broadcast anti-joins — each ≤ broadcast_rows
-             by construction; bigger deltas fold into the compacted set)
-Frontiers shrink: AQE coalesces the near-empty shuffle partitions;
-late-stage frontiers below the broadcast threshold get broadcast-hash
-joins automatically. The visited set is two-tier: a compacted,
-id-partitioned localCheckpoint (re-built every 8 rounds) plus the small
-per-round deltas since — so the O(V) side of the anti-join is never
-re-shuffled inside the loop.
+Depth is the unit-weight shortest distance (bfs_auto.h), so BFS runs the
+PIE SSSP kernel with w=1: range-partitioned fragments settle their local
+levels in one superstep (plans/kernels.py:local_relax_fixpoint) and global
+rounds count only cross-fragment hops. The reference's top-down/bottom-up
+direction switch (bfs.h:126-178) has no separate path here: both
+directions compute the same depths, and the local fixpoint already does
+the whole-fragment dense pass the bottom-up direction exists for.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from libgrape_lite_spark.plans.kernels import graph_op
 from libgrape_lite_spark.plans.superstep import IterationDriver
-from libgrape_lite_spark.session import static_plans
 
 INT64_MAX = (1 << 63) - 1
 
@@ -48,222 +34,44 @@ def bfs(
     directed: bool = False,
     driver: IterationDriver | None = None,
     max_rounds: int | None = None,
-    impl: str = "auto",
     num_fragments: int | None = None,
-    broadcast_rows: int = 1_000_000,
-    dense_fraction: float = 0.05,
-    switch_rounds: int = 20,
 ) -> DataFrame:
     """Returns DataFrame(id: long, depth: long); unreached depth = int64 max.
 
-    ``impl="auto"`` (default) — settled in round 6 by the PAIRED
-    interleaved A/B protocol (scripts/bench_bfs_ab.py, raw:
-    BENCH/runs/bfs_ab_1787008317.json): 12 pairs alternating both impls
-    back-to-back in one JVM with within-pair order flipped per pair —
-    auto won 10 of 12 pairs, median paired delta 0.271 s (push 5.597 s vs
-    auto 5.248 s medians). This replaces the r5 push default, which was
-    chosen by comparing medians ACROSS separate runs on a ±40% bursty
-    box and was contradicted by every subsequent on-record run (driver
-    BENCH_r05 and both r5 judge runs, including under load); the r5
-    "push is loaded-host-robust" claim did not survive the paired design
-    and is retired. At sf0.1 the two are within ~6% — the default matters
-    less than the protocol that set it.
-
-    ``impl="dataframe"`` is the frontier push — cheaper per round when
-    frontiers are tiny relative to the graph; deep or dense graphs are
-    covered by its direction switch, which hands the remaining levels to
-    the same PIE kernel auto uses. Two guard rails
-    for the non-tiny case:
-
-    * a per-round frontier delta joins via **broadcast only below
-      ``broadcast_rows``**; a dense round's delta (O(V) on low-diameter
-      graphs) is folded into the partitioned visited set immediately
-      instead of force-broadcast (the r2 OOM hazard);
-    * when the frontier exceeds ``dense_fraction``·|V|, or after
-      ``switch_rounds`` push rounds the frontier is still growing, the
-      remaining levels are finished by the seeded PIE kernel (unit-weight
-      local Bellman-Ford fixpoint over the *exact* depths settled so far) —
-      the Spark rendition of the reference's top-down → bottom-up direction
-      switch (bfs.h:126-178): both trade per-edge frontier work for a
-      whole-graph dense pass once the frontier stops being sparse.
-
-    The auto impl is bfs_auto parity (bfs_auto.h: depth is the
-    unit-weight shortest distance, same fixpoint): range-partitioned
-    fragments settle their local levels in one superstep via the
-    Bellman-Ford kernel with w=1; global rounds count cross-fragment
-    hops. Identical output to push (golden-verified, both impls).
+    ``max_rounds`` is a DEPTH bound: one PIE superstep settles many levels
+    at once, so depths beyond the budget are clamped back to "unreached".
+    Every superstep dominates one level-synchronous round, so all depths
+    ≤ ``max_rounds`` are final — the clamp gives exactly the output of a
+    level-synchronous BFS stopped after ``max_rounds`` levels.
     """
-    if impl not in ("dataframe", "auto"):
-        raise ValueError(f"impl must be dataframe|auto, got {impl!r}")
+    from libgrape_lite_spark.operators.sssp import _sssp_auto
+    from libgrape_lite_spark.plans.kernels import (
+        cached_edge_balanced_bounds,
+        pie_fragment_table,
+    )
+
     spark = vertices.sparkSession
     drv = driver or IterationDriver(spark)
-
-    def _finish_auto(
-        init_state: DataFrame | None,
-        kdrv: IterationDriver | None = None,
-        rounds: int | None = None,
-    ) -> DataFrame:
-        from libgrape_lite_spark.operators.sssp import _sssp_auto
-        from libgrape_lite_spark.plans.kernels import cached_edge_balanced_bounds
-
-        # fragment bounds memoized on the ORIGINAL edge table — the derived
-        # unit-weight table below is a fresh object the cache can't see, so
-        # compute here and pass through (one approxQuantile per graph, not
-        # per BFS call; same bounds wcc/sssp autos share)
-        nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
-        bounds = cached_edge_balanced_bounds(edges, nf, key="src")
-        # the shared fragment table with BFS's unit weight substituted — a
-        # narrow projection that keeps the pinned range partitioning, so
-        # wcc/sssp/bfs on one graph share one fragment build
-        from libgrape_lite_spark.plans.kernels import pie_fragment_table
-
-        adj_p = pie_fragment_table(edges, nf, bounds, directed=directed).select(
-            "src", "dst", F.lit(1.0).alias("weight"), "part"
-        )
-        d = _sssp_auto(
-            vertices, edges, source, directed, kdrv or drv,
-            max_rounds if rounds is None else rounds, num_fragments,
-            init_state=init_state, bounds=bounds, adj_p=adj_p,
-        )
-        depth = (
-            F.when(F.col("dist") == float("inf"), F.lit(INT64_MAX))
-            .otherwise(F.col("dist").cast("long"))
-        )
-        if max_rounds is not None:
-            # max_rounds is a DEPTH bound, exactly like the push impl's
-            # level budget: one PIE superstep settles many levels at once,
-            # so depths beyond the budget are clamped back to "unreached".
-            # Every superstep dominates one level-synchronous round, so all
-            # depths ≤ max_rounds are final — the clamp reproduces the push
-            # impl's output bit for bit.
-            depth = F.when(depth > max_rounds, F.lit(INT64_MAX)).otherwise(depth)
-        return d.select("id", depth.alias("depth"))
-
-    if impl == "auto":
-        return _finish_auto(None)
-
-    with static_plans(spark):
-        # shared frontier-push layout (plans/kernels.py:push_adjacency_table)
-        # — self-loops are dropped there; a self-loop can never introduce an
-        # unvisited vertex, so BFS results are unchanged
-        from libgrape_lite_spark.plans.kernels import push_adjacency_table
-
-        adj = push_adjacency_table(edges, directed=directed, weighted=False)
-
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            visited, step = resumed
-            frontier = visited.where(F.col("depth") == step).select("id")
-        else:
-            step = 0
-            visited = drv.materialize(
-                spark.createDataFrame([(source, 0)], "id long, depth long"), step
-            )
-            frontier = visited.select("id")
-
-        # Per round only the (usually tiny) frontier is materialized; the
-        # visited set accumulates lazily and is compacted every few rounds
-        # — one cheap job per superstep instead of rewriting O(V) state
-        # every level (deep chains ⇒ many near-empty levels; cf. the
-        # reference's bitset frontier, vertex_set.h).
-        #
-        # The visited check is SPLIT: candidates anti-join (a) the big
-        # compacted set — kept hash-partitioned on id and localCheckpointed,
-        # so the exchange on that side happens once per compaction, not per
-        # round — then (b) the union of the few post-compaction frontiers,
-        # which is small enough for a broadcast anti-join. Without the
-        # split, every round re-shuffles the ever-growing visited union.
-        # id-sorted at compaction so the per-round sort-merge anti-join
-        # never re-sorts the O(V) visited side (r8, guide §2.4)
-        visited_big = (
-            visited.repartition("id").sortWithinPartitions("id")
-            .localCheckpoint(eager=True)
-        )
-        n_vertices = vertices.count()
-        recent: list[DataFrame] = []  # post-compaction (id, depth) deltas
-        go_dense = False
-        prev_active = 1
-
-        def compact(extra: DataFrame | None) -> DataFrame:
-            merged = visited_big
-            for r in recent:
-                merged = merged.unionByName(r)
-            if extra is not None:
-                merged = merged.unionByName(extra)
-            return drv.materialize(
-                merged.repartition("id").sortWithinPartitions("id"), step
-            )
-
-        while max_rounds is None or step < max_rounds:
-            t0 = time.time()
-            step += 1
-            cand = (
-                adj.join(frontier.withColumnRenamed("id", "src"), "src")
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited_big.select("id"), "id", "left_anti")
-            )
-            # post-compaction deltas: broadcast ONLY while they are small
-            # (the compaction policy below guarantees every delta in
-            # ``recent`` is ≤ broadcast_rows — a dense round's delta is
-            # folded into the partitioned set instead of force-broadcast)
-            for r in recent:
-                cand = cand.join(F.broadcast(r.select("id")), "id", "left_anti")
-            # frontier size rides the materializing job (observe) — no
-            # second count job over the cached frontier per level
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            nxt = (
-                cand.select("id", F.lit(step).cast("long").alias("depth"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
-            )
-            active = obs.get["n"]
-            frontier = nxt.select("id")
-            if active > broadcast_rows or len(recent) >= 7:
-                visited_big = compact(nxt)
-                recent = []
-            else:
-                recent.append(nxt)
-            drv.log(step, active, time.time() - t0, op="bfs")
-            if active == 0:
-                break
-            # direction switch (reference bfs.h:126-178 analog): once the
-            # frontier is dense — or keeps coming past switch_rounds (deep
-            # graph) — finish all remaining levels with the seeded PIE
-            # kernel instead of per-level push rounds.
-            if active > dense_fraction * n_vertices or (
-                step >= switch_rounds and active >= prev_active
-            ):
-                go_dense = True
-                break
-            prev_active = active
-        visited = compact(None) if recent else visited_big
-
-    if go_dense:
-        seed = visited.select(
-            "id", F.col("depth").cast("double").alias("dist"),
-            (F.col("depth") == step).alias("improved"),
-        )
-        # a fresh child driver: the shared one holds (id, depth)-schema
-        # checkpoints this run; the kernel phase checkpoints under a
-        # deterministic derived run_id so kill-resume still works
-        kdrv = IterationDriver(
-            spark,
-            run_id=f"{drv.run_id}-dense",
-            checkpoint_dir=drv.checkpoint_dir,
-            checkpoint_every=drv.checkpoint_every,
-        )
-        remaining = None if max_rounds is None else max(0, max_rounds - step)
-        out = _finish_auto(seed, kdrv=kdrv, rounds=remaining)
-        drv.metrics.extend(kdrv.metrics)
-        drv.finish()
-        return out
-
-    drv.finish()
-    return (
-        vertices.select("id")
-        .join(visited, "id", "left")
-        .select("id", F.coalesce("depth", F.lit(INT64_MAX)).alias("depth"))
+    # fragment bounds memoized on the ORIGINAL edge table — the derived
+    # unit-weight table below is a fresh object the cache can't see, so
+    # compute here and pass through (one approxQuantile per graph, not
+    # per BFS call; same bounds wcc/sssp autos share)
+    nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    bounds = cached_edge_balanced_bounds(edges, nf, key="src")
+    # the shared fragment table with BFS's unit weight substituted — a
+    # narrow projection that keeps the pinned range partitioning, so
+    # wcc/sssp/bfs on one graph share one fragment build
+    adj_p = pie_fragment_table(edges, nf, bounds, directed=directed).select(
+        "src", "dst", F.lit(1.0).alias("weight"), "part"
     )
+    d = _sssp_auto(
+        vertices, edges, source, directed, drv, max_rounds, num_fragments,
+        bounds=bounds, adj_p=adj_p,
+    )
+    depth = (
+        F.when(F.col("dist") == float("inf"), F.lit(INT64_MAX))
+        .otherwise(F.col("dist").cast("long"))
+    )
+    if max_rounds is not None:
+        depth = F.when(depth > max_rounds, F.lit(INT64_MAX)).otherwise(depth)
+    return d.select("id", depth.alias("depth"))

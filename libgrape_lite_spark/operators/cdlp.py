@@ -42,45 +42,26 @@ def cdlp(
     max_rounds: int = 10,
     directed: bool = False,
     driver: IterationDriver | None = None,
-    impl: str = "dataframe",
-    num_fragments: int | None = None,
     hub_salts: int | str = "auto",
     hub_degree_factor: float = 8.0,
     min_hub_degree: int = 1_000_000,
 ) -> DataFrame:
     """Returns DataFrame(id: long, label: long).
 
-    ``impl="kernel"`` — per-fragment vote pre-counting (factorized pair
-    counting, plans/kernels.py::gather_label_counts); only partial counts
-    shuffle. ``"dataframe"`` (default) — join + two-level aggregate.
-
-    WHEN TO USE WHICH (profiled round 6,
-    BENCH/runs/cdlp_profile_1787008995.json): at sf0.1 the kernel gather
-    runs ~3× the dataframe gather per round (1.28 vs 0.38 s median) and
-    the gap is NOT kernel math — it is the per-round Arrow/cogroup
-    transfer of the pinned adjacency into stateless Python workers, a
-    constant the dataframe path's all-JVM join never pays. The kernel
-    path earns that constant back only when per-fragment pre-counting
-    collapses shuffle volume the JVM aggregate cannot: hub-salted skew
-    (a hub dst's votes pre-merge inside each salted sub-fragment) or
-    heavy parallel-edge multiplicity. Default to ``dataframe``; the auto
-    hub-salting handles moderate skew there too — reach for ``kernel``
-    only on salted power-law graphs where the dataframe two-level
-    aggregate's first-level fan-out is itself the bottleneck.
+    Each round joins the labels onto the pinned gather-by-dst adjacency
+    and aggregates in the JVM (count per (voter, label), then the
+    max-of-struct pick) — no per-round Python. A per-fragment cogroup
+    vote pre-count lost every pair to this path even on the salted
+    power-law graph it targeted (BENCH/runs/cdlp_skew_1792261620.json).
 
     ``hub_salts`` — hub-skew protection behind the SAME auto detection
     PageRank uses (plans/kernels.py::hub_salt_verdict, reading the
     per-graph memoized degree stats — zero extra jobs after the first
-    operator on a graph). When engaged: the dataframe path counts votes
-    two-level, per (voter, label, salt-of-dst) then per (voter, label) —
-    sum of counts is associative, identical result; the kernel path swaps
-    in the salted fragment layout (a hub dst's edges spread over ~salts
-    fragments, labels replicated to match — a hub dst is otherwise ONE
-    cogroup key and its whole adjacency lands on one task). Verdict at
+    operator on a graph). When engaged, votes are counted two-level, per
+    (voter, label, salt-of-dst) then per (voter, label) — sum of counts
+    is associative, identical result. Verdict at
     ``driver.info["cdlp_hub_salts"]``.
     """
-    if impl not in ("dataframe", "kernel"):
-        raise ValueError(f"impl must be dataframe|kernel, got {impl!r}")
     if not (hub_salts == "auto" or isinstance(hub_salts, int)):
         raise ValueError(f"hub_salts must be an int or 'auto', got {hub_salts!r}")
     spark = vertices.sparkSession
@@ -114,17 +95,7 @@ def cdlp(
         # pre-partition the edge side once — the table is memoized per
         # edge table and SHARED with pagerank_local (identical layout;
         # plans/kernels.py gather_adjacency_table)
-        if impl == "kernel":
-            from libgrape_lite_spark.plans.kernels import (
-                dst_kernel_adjacency_table,
-                gather_label_counts,
-            )
-
-            nf = num_fragments or int(spark.conf.get("spark.sql.shuffle.partitions"))
-            k_salts = max(1, hub_salts)
-            adj = dst_kernel_adjacency_table(edges, nf, directed, salts=k_salts)
-        else:
-            adj = gather_adjacency_table(edges, "dst", directed)
+        adj = gather_adjacency_table(edges, "dst", directed)
 
         resumed = drv.latest_checkpoint()
         if resumed is not None:
@@ -137,9 +108,7 @@ def cdlp(
             t0 = time.time()
             step += 1
             # gather over out-adjacency: vertex u sees labels of its out-nbrs
-            if impl == "kernel":
-                counts = gather_label_counts(adj, state, "label", nf, salts=k_salts)
-            elif hub_salts > 0:
+            if hub_salts > 0:
                 # two-level vote count: per (voter, label, salt-of-dst)
                 # partials first, spreading a hub voter's rows over
                 # hub_salts reducers, then the exact per-(voter, label)

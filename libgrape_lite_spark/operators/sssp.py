@@ -125,16 +125,11 @@ def _sssp_auto(
     drv: IterationDriver,
     max_rounds: int | None,
     num_fragments: int | None,
-    init_state: DataFrame | None = None,
     bounds: list[int] | None = None,
     adj_p: DataFrame | None = None,
 ) -> DataFrame:
     """PIE-model SSSP: per-fragment local Bellman-Ford to fixpoint, then
     one min-combine shuffle of improved distances per superstep.
-
-    ``init_state(id, dist, improved)`` — optional warm start: resume the
-    fixpoint from already-settled distances instead of the bare source
-    (used by BFS's dense-round switch; missing ids are +inf).
 
     ``bounds`` / ``adj_p`` — pre-computed fragment boundaries and prepared
     fragment table (BFS passes both, derived from the memo on its original
@@ -168,11 +163,6 @@ def _sssp_auto(
         resumed = drv.latest_checkpoint()
         if resumed is not None:
             state, step = resumed
-        elif init_state is not None:
-            step = 0
-            state = drv.materialize(
-                init_state.select("id", "dist", "improved"), step
-            )
         else:
             step = 0
             state = drv.materialize(

@@ -5,18 +5,12 @@ atomic reductions (ImmutableCSR, grape/graph/immutable_csr.h; atomic_min/
 add, grape/utils/atomic_ops.h). The Spark-native equivalent here is a
 ``cogroup(edges_by_part, state_by_part).applyInPandas`` running a NumPy
 kernel per fragment, Arrow-batched with no per-row Python:
-
-* :func:`local_min_fixpoint` (wcc) and :func:`local_relax_fixpoint`
-  (sssp, bfs) — the PIE partial evaluation behind ``impl="auto"``: each
-  range-partitioned fragment (:func:`edge_balanced_bounds`, Rebalancer
-  parity) runs its local fixpoint before anything shuffles and emits only
-  the values it improved;
-* :func:`gather_label_counts` — CDLP ``impl="kernel"``'s vote pre-count
-  over edges hash-partitioned by ``dst`` (:func:`partition_edges`, the
-  HashPartitioner parity of grape/fragment/partitioner.h:39-41).
-
-Each shuffles per-fragment partial results, never one row per edge — the
-reference's "one message per (vertex, dest fragment)" guarantee
+:func:`local_min_fixpoint` (wcc) and :func:`local_relax_fixpoint` (sssp,
+bfs) — the PIE partial evaluation behind ``impl="auto"`` and BFS. Each
+range-partitioned fragment (:func:`edge_balanced_bounds`, Rebalancer
+parity) runs its local fixpoint before anything shuffles and emits only
+the values it improved, never one row per edge — the reference's "one
+message per (vertex, dest fragment)" guarantee
 (csr_edgecut_fragment_base.h:226-258).
 
 The rest of the module is the ``PrepareToRunApp`` analog: the edge
@@ -41,8 +35,7 @@ def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> D
     """Assign each edge to its ``key``-endpoint's fragment and co-locate —
     the one-time `PrepareToRunApp` stage; cache the result across
     supersteps. ``key="src"`` for gathers that read source state;
-    ``key="dst"`` for gathers that read destination state (CDLP
-    out-adjacency votes).
+    ``key="dst"`` for gathers that read destination state.
 
     Sorted by ``part`` within partitions: every consumer is a
     ``groupBy("part").cogroup(...)`` whose sort-based cogroup re-SORTED
@@ -213,103 +206,6 @@ def local_relax_fixpoint(
     return partials.groupBy("id").agg(F.min("gathered").alias("gathered"))
 
 
-def gather_label_counts(
-    edges_p: DataFrame,
-    state: DataFrame,
-    label_col: str,
-    num_fragments: int,
-    salts: int = 1,
-) -> DataFrame:
-    """CDLP's vote gather as a fragment kernel: for every edge (u→v), u
-    receives one vote for label(v); per-fragment the kernel pre-counts
-    (u, label) pairs with ``np.unique`` — the per-fragment combine — and
-    only partial counts shuffle.
-
-    ``edges_p`` must be partitioned by **dst** owner
-    (``partition_edges`` on the flipped table or
-    ``pmod(hash(dst), P)``) so label lookups are fragment-local.
-    Returns DataFrame(id, label, cnt).
-
-    ``salts > 1`` is the hub-skew variant: ``edges_p`` must then come from
-    :func:`dst_kernel_adjacency_table` with the same ``salts`` — a hub
-    dst's edges are spread over ~``salts`` fragments by a src-derived salt
-    instead of all landing in hash(dst)'s one — and the state side is
-    REPLICATED ``salts``× so every sub-fragment still resolves its dst
-    labels locally (the mirror-vertex trick, SURVEY.md §4.4: O(salts·V)
-    replicated state buys per-fragment edge balance). Identical results —
-    partial counts merge in the same final sum."""
-
-    def kernel(key, edges_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if edges_pdf.empty or state_pdf.empty:
-            return pd.DataFrame(
-                {"id": np.array([], dtype=np.int64),
-                 "label": np.array([], dtype=np.int64),
-                 "cnt": np.array([], dtype=np.int64)}
-            )
-        ids = state_pdf["id"].to_numpy(dtype=np.int64)
-        labels = state_pdf[label_col].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        ids_sorted, labels_sorted = ids[order], labels[order]
-
-        src = edges_pdf["src"].to_numpy(dtype=np.int64)
-        dst = edges_pdf["dst"].to_numpy(dtype=np.int64)
-        pos = np.searchsorted(ids_sorted, dst)
-        valid = (pos < len(ids_sorted)) & (
-            ids_sorted[np.minimum(pos, len(ids_sorted) - 1)] == dst
-        )
-        src = src[valid]
-        vote = labels_sorted[pos[valid]]
-        if len(src) == 0:  # every dst unresolved in this fragment
-            return pd.DataFrame(
-                {"id": np.array([], dtype=np.int64),
-                 "label": np.array([], dtype=np.int64),
-                 "cnt": np.array([], dtype=np.int64)}
-            )
-        # factorized 1-D pair counting: two int64 uniques + one packed-key
-        # unique instead of np.unique(pairs, axis=0) — the axis=0 form
-        # sorts void-dtype row bytes and measured 7x slower at fragment
-        # size (34.7 vs 4.9 ms on a 52k-edge fragment,
-        # BENCH/runs/cdlp_profile_1787008995.json); the gap grows with
-        # fragment size, which is exactly the 100 TB direction. The packed
-        # key s_inv*n_labels+v_inv stays within int64: both factors are
-        # bounded by the fragment's edge count.
-        su, s_inv = np.unique(src, return_inverse=True)
-        vu, v_inv = np.unique(vote, return_inverse=True)
-        key = s_inv.astype(np.int64) * len(vu) + v_inv
-        uk, counts = np.unique(key, return_counts=True)
-        return pd.DataFrame(
-            {
-                "id": su[uk // len(vu)],
-                "label": vu[uk % len(vu)],
-                "cnt": counts.astype(np.int64),
-            }
-        )
-
-    base = state.select("id", label_col)
-    if salts > 1:
-        # replicate each vertex's label to every salted sub-fragment that
-        # may hold edges pointing at it: part = pmod(hash(id, j), P) for
-        # j in 0..salts-1 (matches dst_kernel_adjacency_table's
-        # pmod(hash(dst, salt), P) assignment)
-        state_p = (
-            base.withColumn(
-                "_j", F.explode(F.array(*[F.lit(j) for j in range(salts)]))
-            )
-            .withColumn(
-                "part", F.pmod(F.hash("id", F.col("_j")), F.lit(num_fragments))
-            )
-            .drop("_j")
-        )
-    else:
-        state_p = partition_state(base, num_fragments)
-    partials = (
-        edges_p.groupBy("part")
-        .cogroup(state_p.groupBy("part"))
-        .applyInPandas(kernel, schema="id long, label long, cnt long")
-    )
-    return partials.groupBy("id", "label").agg(F.sum("cnt").alias("cnt"))
-
-
 def edge_balanced_bounds(
     edges: DataFrame, num_fragments: int, key: str = "src",
     relative_error: float = 0.001,
@@ -349,7 +245,7 @@ def cached_edge_balanced_bounds(
     The bounds only depend on the edge table's ``key`` distribution, so the
     result is memoized on the DataFrame object itself (keyed by
     ``(num_fragments, key, relative_error)``); every operator that runs on
-    the same graph — wcc/sssp/bfs auto impls in one session — reuses the
+    the same graph — wcc/sssp auto and bfs in one session — reuses the
     one approxQuantile pass instead of re-scanning O(E) per call (the
     round-3 on-record regression: one redundant full pass per operator at
     100 TB). Call this at graph-build time (next to the degree table) to
@@ -384,9 +280,9 @@ _PREP_CACHE_ATTR = "_lgls_prepared"
 _PATCH_FALLBACKS = 0
 
 # Max pinned layouts per edge table. A full analytics session over one
-# graph (all six algorithm apps incl. kernel variants) touches 7 distinct
-# layouts — pie fragment, push×2, pr gather, dst gather ×2, degree — so 8
-# holds the whole working set; the 9th distinct layout evicts the
+# graph (all six algorithm apps, every impl) touches 6 distinct layouts —
+# pie fragment, push×2, src gather, dst gather, degree — so 8 holds the
+# whole working set; the 9th distinct layout evicts the
 # least-recently-used one (its O(E) blocks are unpersisted). The reference
 # frees per-app prep with the worker (worker.h Finalize); an unbounded
 # cache would instead accumulate several pinned O(E) tables over a long
@@ -648,7 +544,7 @@ def push_adjacency_table(
     edges: DataFrame, directed: bool = False, weighted: bool = False
 ) -> DataFrame:
     """The frontier-push impls' shared gather layout: hash-partitioned by
-    ``src`` and pinned. Unweighted (wcc dataframe, bfs push) keeps distinct
+    ``src`` and pinned. Unweighted (wcc dataframe, LCC) keeps distinct
     non-self-loop (src, dst) pairs; weighted (sssp dataframe) keeps the min
     weight per pair — the only weight that can win a relaxation. Built once
     per (graph, direction, weightedness); every operator call on the same
@@ -723,48 +619,6 @@ def gather_adjacency_table(
         )
 
     return cached_prepared(edges, ("gather", key, directed), build)
-
-
-def dst_kernel_adjacency_table(
-    edges: DataFrame, num_fragments: int, directed: bool = False, salts: int = 1
-) -> DataFrame:
-    """The cogroup-kernel analog of the ``key="dst"`` gather layout:
-    doubled, parallel edges kept, fragment-assigned by hash(dst) and
-    co-located (CDLP kernel impl's vote gather).
-
-    ``salts > 1``: hub-skew layout — the fragment is chosen by
-    ``pmod(hash(dst, salt), P)`` with ``salt = pmod(hash(src), salts)``,
-    so a hub dst's edges spread over ~``salts`` fragments instead of one
-    cogroup key; pair with :func:`gather_label_counts` at the same
-    ``salts`` (which replicates the state side to match)."""
-
-    def build() -> DataFrame:
-        from libgrape_lite_spark.functions.edges import undirected as _undirected
-
-        e = edges.select("src", "dst")
-        a = e if directed else _undirected(e)
-        if salts > 1:
-            withp = a.withColumn(
-                "part",
-                F.pmod(
-                    F.hash("dst", F.pmod(F.hash("src"), F.lit(salts))),
-                    F.lit(num_fragments),
-                ),
-            )
-            # sorted by part once at build → per-round cogroup sort elided
-            # (see partition_edges)
-            return (
-                withp.repartition(num_fragments, "part")
-                .sortWithinPartitions("part")
-                .localCheckpoint(eager=True)
-            )
-        return partition_edges(a, num_fragments, key="dst").localCheckpoint(
-            eager=True
-        )
-
-    return cached_prepared(
-        edges, ("gather_dst_kernel", num_fragments, directed, salts), build
-    )
 
 
 def cached_degree_table(
@@ -861,7 +715,7 @@ def pie_fragment_table(
     """The PIE kernels' shared fragment table: (src, dst, weight, part),
     range-partitioned by :func:`segment_part_bounds` and pinned.
 
-    One table serves wcc/sssp/bfs auto impls on the same graph — wcc
+    One table serves wcc/sssp auto and bfs on the same graph — wcc
     projects (src, dst) and drops self-loops, bfs overrides the weight
     with 1.0 — all narrow transforms that preserve the partitioning, so
     the doubling + per-(src,dst) min-weight combine + range shuffle
@@ -899,7 +753,6 @@ def prepare_graph(
     edges: DataFrame,
     num_fragments: int | None = None,
     directed: bool = False,
-    kernel: bool = False,
 ) -> dict[str, DataFrame]:
     """Build EVERY shared prepared layout for a graph up front — the exact
     analog of the reference's load-then-``PrepareToRunApp`` phase
@@ -907,12 +760,12 @@ def prepare_graph(
     (vertices, edges) pair starts its supersteps immediately, paying no
     E-sized shuffle of its own.
 
-    Layouts warmed (7 cache entries, within :data:`PREP_CACHE_CAP`):
-    fragment bounds (approxQuantile memo), PIE fragment table (wcc/bfs/
-    sssp auto), frontier-push adjacency unweighted (wcc/bfs dataframe,
-    LCC) + weighted (sssp), gather-by-src (PageRank) and gather-by-dst
+    Layouts warmed (6 cache entries, within :data:`PREP_CACHE_CAP`, plus
+    the fragment-bounds approxQuantile memo): PIE fragment table (wcc/sssp
+    auto, bfs), frontier-push adjacency unweighted (wcc dataframe, LCC) +
+    weighted (sssp), gather-by-src (PageRank) and gather-by-dst
     (CDLP/PageRankLocal) adjacencies, and the out-degree table
-    (PageRank/LCC). ``kernel=True`` adds the CDLP cogroup-kernel layout.
+    (PageRank/LCC).
 
     Benchmarks call this inside the timed graph-build step so each
     operator's number measures supersteps, not whoever ran first
@@ -943,10 +796,6 @@ def prepare_graph(
         ("_src_deg", _src_then_degree),
         ("gather_dst", lambda: gather_adjacency_table(edges, "dst", directed)),
     ]
-    if kernel:
-        builders.append(
-            ("gather_dst_kernel", lambda: dst_kernel_adjacency_table(edges, nf, directed))
-        )
 
     from concurrent.futures import ThreadPoolExecutor
 

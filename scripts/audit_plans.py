@@ -7,7 +7,7 @@ Checks (each prints PASS/FAIL and the evidence lines):
 2. A PageRank superstep join does NOT re-exchange the pre-partitioned
    adjacency (no Exchange directly above the adjacency scan).
 3. Hot-path expressions run inside WholeStageCodegen.
-4. The frontier join in BFS/SSSP broadcasts the (small) frontier side.
+4. The frontier join in SSSP/WCC broadcasts the (small) frontier side.
 
 Writes the audited plans to PLANS.md. Run: python scripts/audit_plans.py
 """
@@ -99,7 +99,7 @@ def main() -> int:
     hop = adj.join(frontier, "src").select("dst")
     p3 = plan_of(hop)
     results.append(("small frontier broadcast join", "BroadcastHashJoin" in p3, "see plan"))
-    sections.append(("BFS frontier expansion", p3))
+    sections.append(("Frontier expansion (sssp/wcc push)", p3))
 
     # 5. embedding dedup (LSH path): no cartesian / nested-loop join
     from libgrape_lite_spark.operators.dedup import dedup_embedding_cosine, dedup_minhash
@@ -152,7 +152,7 @@ def main() -> int:
     n_ex7 = len(re.findall(r"\(\d+\) Exchange", phys7))
     has_kernel = "FlatMapCoGroupsInPandas" in phys7
     results.append(
-        ("PIE superstep (wcc/sssp/bfs auto): adjacency not re-shuffled into the "
+        ("PIE superstep (wcc/sssp auto, bfs): adjacency not re-shuffled into the "
          "cogroup kernel (2 exchanges: state + combine)",
          n_ex7 == 2 and has_kernel,
          f"exchanges={n_ex7}, arrow cogroup kernel={'yes' if has_kernel else 'MISSING'}"))

@@ -62,7 +62,7 @@ def main() -> None:
     vertices, edges = build_graph(spark, SF_DIR)
     n_edges = edges.count()
     nf = tune_shuffle_partitions(spark, 2 * n_edges, max_partitions=CPUS)
-    prepare_graph(vertices, edges, num_fragments=nf, kernel=True)
+    prepare_graph(vertices, edges, num_fragments=nf)
     cached_edge_balanced_bounds(edges, nf, key="src")
 
     # deterministic delta: the N_DELTA smallest (src, dst) edges
@@ -103,7 +103,7 @@ def main() -> None:
         info.setdefault("pending_patches", {})[f"patch={patch}"] = len(
             m._lgls_pending_patches
         )
-        prepare_graph(vertices, m, num_fragments=nf, kernel=True)
+        prepare_graph(vertices, m, num_fragments=nf)
         return (m,)
 
     def fresh_rebuild():
@@ -111,7 +111,7 @@ def main() -> None:
         # reload pays (the localCheckpoint copy stands in for the load)
         merged = merge_edges(edges, t_delta, patch_layouts=False)
         rebuilt = merged.select("src", "dst", "weight").localCheckpoint(eager=True)
-        prepare_graph(vertices, rebuilt, num_fragments=nf, kernel=True)
+        prepare_graph(vertices, rebuilt, num_fragments=nf)
         return (merged, rebuilt)
 
     t_rebuild = leg("rebuild_prepare", fresh_rebuild)
@@ -120,7 +120,7 @@ def main() -> None:
     # patched vs unpatched topology merge: the expected gap (one saved
     # wide shuffle per pair-min layout) is sub-2× at sf0.1, so decide it
     # the way sub-2× questions are decided on this box — paired
-    # interleaved runs, median per-pair delta (bench_bfs_ab.py protocol)
+    # interleaved runs, median per-pair delta
     def one(patch: bool) -> float:
         t = time.time()
         tables = merge_and_prepare(t_delta, patch)

@@ -11,12 +11,9 @@ Writes <out_dir>/<name>_<suffix>.txt for:
                           state shaped like a mid-loop checkpoint)
   - pagerank_local_superstep
   - cdlp_superstep       (dataframe vote count)
-  - cdlp_kernel_superstep (cogroup kernel — Sort count shows the
-                          build-time part-sort elision)
-  - pie_superstep        (wcc/sssp/bfs auto local-fixpoint cogroup)
+  - pie_superstep        (wcc/sssp auto and bfs local-fixpoint cogroup)
   - wcc_df_superstep     (push gather + pointer jump)
   - sssp_superstep       (frontier relax)
-  - bfs_superstep        (frontier expand + visited anti-joins)
   - lcc_plan             (triangle intersect pipeline)
   - mutation_patch       (pure-removal layout patch)
 
@@ -86,7 +83,6 @@ def main() -> None:
     from libgrape_lite_spark.plans.kernels import (
         cached_degree_table,
         cached_edge_balanced_bounds,
-        dst_kernel_adjacency_table,
         gather_adjacency_table,
         local_min_fixpoint,
         pie_fragment_table,
@@ -101,7 +97,6 @@ def main() -> None:
         gdst = gather_adjacency_table(edges, "dst", False)
         push_u = push_adjacency_table(edges, directed=False, weighted=False)
         push_w = push_adjacency_table(edges, directed=False, weighted=True)
-        kadj = dst_kernel_adjacency_table(edges, nf, False)
         deg = cached_degree_table(edges, vertices, gsrc, False)
 
         # state shaped like a mid-loop checkpoint: id-hash partitioned AND
@@ -158,12 +153,6 @@ def main() -> None:
             )
         )
 
-        from libgrape_lite_spark.plans.kernels import gather_label_counts
-
-        plans["cdlp_kernel_superstep"] = plan_of(
-            gather_label_counts(kadj, lab, "label", nf)
-        )
-
         pie_adj = pie.where(F.col("src") != F.col("dst")).select("src", "dst", "part")
         plans["pie_superstep"] = plan_of(
             local_min_fixpoint(pie_adj, lab.select("id", F.col("label").alias("comp")),
@@ -212,16 +201,6 @@ def main() -> None:
             dist_state.select("id", "dist").join(cand, "id", "full")
         )
 
-        visited_big = dist_state.select("id", F.lit(0).cast("long").alias("depth"))
-        visited_big = visited_big.repartition("id").localCheckpoint(eager=True)
-        bfs_cand = (
-            push_u.join(visited_big.select(F.col("id").alias("src")), "src")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited_big.select("id"), "id", "left_anti")
-        )
-        plans["bfs_superstep"] = plan_of(bfs_cand)
-
     from libgrape_lite_spark.operators import lcc
 
     plans["lcc_plan"] = plan_of(lcc(vertices, edges))
@@ -231,7 +210,9 @@ def main() -> None:
     with static_plans(spark):
         vids = spark.createDataFrame([(7,)], "vid long").localCheckpoint(eager=True)
         plans["mutation_patch"] = plan_of(
-            _apply_removals(kadj.select("src", "dst", "part"), False, vids, None)
+            _apply_removals(
+                pie.select("src", "dst", "weight", "part"), False, vids, None
+            )
         )
 
     for name, text in plans.items():

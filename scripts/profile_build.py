@@ -78,7 +78,6 @@ def one_pass(spark, tag):
     from libgrape_lite_spark.plans.kernels import (
         cached_degree_table,
         cached_edge_balanced_bounds,
-        dst_kernel_adjacency_table,
         gather_adjacency_table,
         pie_fragment_table,
         push_adjacency_table,
@@ -102,8 +101,6 @@ def one_pass(spark, tag):
     clock("gather_dst", lambda: gather_adjacency_table(edges, "dst", False))
     spark.sparkContext.setJobDescription(f"{tag}: degree")
     clock("degree", lambda: cached_degree_table(edges, vertices, gsrc, False))
-    spark.sparkContext.setJobDescription(f"{tag}: dst kernel")
-    clock("dst_kernel", lambda: dst_kernel_adjacency_table(edges, nf, False))
     spark.sparkContext.setJobDescription(None)
 
     t["total"] = round(sum(v for k, v in t.items() if k != "total"), 3)

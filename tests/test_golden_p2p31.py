@@ -21,6 +21,12 @@ from tests.conftest import REFERENCE_DATASET
 
 DATASET = REFERENCE_DATASET
 
+pytestmark = pytest.mark.skipif(
+    not REFERENCE_DATASET.exists(),
+    reason=f"reference dataset {REFERENCE_DATASET} is absent; the golden "
+    "p2p-31 outputs ship only with the reference checkout",
+)
+
 
 def load_golden(name: str) -> pd.DataFrame:
     return pd.read_csv(
@@ -74,14 +80,14 @@ def test_bfs_undirected(spark, graph):
     from libgrape_lite_spark.operators import bfs
 
     v, e = graph
-    check_exact(bfs(v, e, source=6, directed=False, impl="dataframe"), "depth", "p2p-31-BFS")
+    check_exact(bfs(v, e, source=6, directed=False), "depth", "p2p-31-BFS")
 
 
 def test_bfs_directed(spark, graph):
     from libgrape_lite_spark.operators import bfs
 
     v, e = graph
-    check_exact(bfs(v, e, source=6, directed=True, impl="dataframe"), "depth", "p2p-31-BFS-directed")
+    check_exact(bfs(v, e, source=6, directed=True), "depth", "p2p-31-BFS-directed")
 
 
 # ---------------------------------------------------------------- SSSP
@@ -219,15 +225,3 @@ def test_wcc_auto_golden(spark, graph):
         a, b = got[oid], golden[oid]
         assert fwd.setdefault(a, b) == b, f"oid={oid}"
         assert bwd.setdefault(b, a) == a, f"oid={oid}"
-
-
-def test_bfs_auto_golden(spark, graph):
-    """bfs_auto (unit-weight local relaxation) against the reference golden,
-    directed variant included (deep-chain case)."""
-    from libgrape_lite_spark.operators import bfs
-
-    v, e = graph
-    check_exact(bfs(v, e, source=6, directed=False, impl="auto"), "depth", "p2p-31-BFS")
-    check_exact(
-        bfs(v, e, source=6, directed=True, impl="auto"), "depth", "p2p-31-BFS-directed"
-    )

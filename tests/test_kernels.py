@@ -20,21 +20,6 @@ def test_lcc_wedge_equals_intersect(spark):
     assert a == b
 
 
-def test_cdlp_kernel_equals_dataframe(spark):
-    from libgrape_lite_spark.operators import cdlp
-
-    v = make_vertices(spark, range(15))
-    e = make_edges(
-        spark,
-        [(i, (i + 1) % 15) for i in range(15)]
-        + [(0, 5), (5, 0), (3, 3), (7, 8), (7, 8)],  # self-loop + parallel edge
-    )
-    a = {r["id"]: r["label"] for r in cdlp(v, e, max_rounds=4).collect()}
-    b = {r["id"]: r["label"] for r in
-         cdlp(v, e, max_rounds=4, impl="kernel", num_fragments=4).collect()}
-    assert a == b
-
-
 def test_wcc_auto_equals_dataframe(spark):
     """PIE local-fixpoint kernel (impl='auto') matches the join fixpoint on
     a multi-chain + cross-link graph (chains exercise the local collapse)."""

@@ -156,7 +156,7 @@ def test_pagerank_convergence_stop(spark):
     assert drv.metrics[-1].extra["max_delta"] < 1e-6
 
 
-# ----------------------------------------- BFS guard rails (round-3 fixes)
+# ------------------------------------------ BFS trees and deep chains
 def _bfs_oracle_binary_tree(depth_levels):
     """Complete binary tree 1..2^L-1: depth(v) = floor(log2(v))."""
     out = {}
@@ -165,60 +165,48 @@ def _bfs_oracle_binary_tree(depth_levels):
     return out
 
 
-def test_bfs_dense_delta_folds_instead_of_broadcast(spark):
-    """broadcast_rows=1 forces EVERY delta through the fold-into-
-    partitioned-set branch (no forced broadcast anti-join) — results must
-    be identical to the default path."""
-    from libgrape_lite_spark.operators import bfs
-
-    levels = 5
-    ids = list(range(1, 2**levels))
-    v = make_vertices(spark, ids)
-    e = make_edges(spark, [(p, c) for c in ids if c > 1 for p in [c // 2]])
-    got = as_dict(bfs(v, e, source=1, impl="dataframe", broadcast_rows=1))
-    assert got == _bfs_oracle_binary_tree(levels)
-
-
-def test_bfs_dense_fraction_switch_matches_push(spark):
-    """dense_fraction=0 switches to the seeded PIE kernel after round 1 —
-    exact parity with the pure push path, both directions."""
-    from libgrape_lite_spark.operators import bfs
+def _bfs_oracle_directed_subtree(depth_levels, root):
+    """Directed binary tree searched from ``root``: its descendants get
+    their depth below it, every other vertex stays INT64_MAX."""
     from libgrape_lite_spark.operators.bfs import INT64_MAX
 
-    levels = 5
-    ids = list(range(1, 2**levels))
-    v = make_vertices(spark, ids)
-    pairs = [(p, c) for c in ids if c > 1 for p in [c // 2]]
-    e = make_edges(spark, pairs)
-    got = as_dict(bfs(v, e, source=1, impl="dataframe", dense_fraction=0.0))
-    assert got == _bfs_oracle_binary_tree(levels)
-
-    # directed from a mid vertex: unreachable stays INT64_MAX through the
-    # seeded-kernel finish too
-    got_dir = as_dict(bfs(v, e, source=2, directed=True, impl="dataframe", dense_fraction=0.0))
+    ids = range(1, 2 ** depth_levels)
     want = {i: INT64_MAX for i in ids}
-    want[2] = 0
+    want[root] = 0
     for c in ids:
         if c > 1:
             anc, d = c, 0
-            while anc > 2:
+            while anc > root:
                 anc //= 2
                 d += 1
-            if anc == 2:
+            if anc == root:
                 want[c] = d
-    assert got_dir == want
+    return want
 
 
-def test_bfs_switch_rounds_deep_chain(spark):
-    """A 40-level chain with switch_rounds=5 finishes through the seeded
-    kernel (frontier persists) — exact depths."""
+_TREE5 = [(c // 2, c) for c in range(2, 2**5)]
+_CHAIN40 = [(i, i + 1) for i in range(1, 40)]
+
+
+@pytest.mark.parametrize(
+    "pairs,source,directed,want",
+    [
+        pytest.param(_TREE5, 1, False, _bfs_oracle_binary_tree(5), id="binary_tree"),
+        pytest.param(
+            _TREE5, 2, True, _bfs_oracle_directed_subtree(5, 2), id="directed_subtree"
+        ),
+        pytest.param(_CHAIN40, 1, False, {i: i - 1 for i in range(1, 41)}, id="chain40"),
+    ],
+)
+def test_bfs_exact_depths(spark, pairs, source, directed, want):
+    """A 5-level binary tree (undirected from the root, directed from a
+    mid vertex with the rest unreachable) and a 40-level chain — exact
+    depths."""
     from libgrape_lite_spark.operators import bfs
 
-    n = 40
-    v = make_vertices(spark, list(range(1, n + 1)))
-    e = make_edges(spark, [(i, i + 1) for i in range(1, n)])
-    got = as_dict(bfs(v, e, source=1, impl="dataframe", switch_rounds=5))
-    assert got == {i: i - 1 for i in range(1, n + 1)}
+    v = make_vertices(spark, sorted(want))
+    e = make_edges(spark, pairs)
+    assert as_dict(bfs(v, e, source=source, directed=directed)) == want
 
 
 # ----------------------------------------- PageRank variants (round 3)

@@ -1,13 +1,16 @@
 """Property tests vs NumPy/pure-Python oracles (SURVEY.md §7 risk register:
 CDLP tie-breaking and per-parallel-edge multiplicity must match
-cdlp_utils.h:28-60 exactly; WCC vs union-find)."""
+cdlp_utils.h:28-60 exactly; WCC vs union-find; BFS vs a deque search;
+SSSP vs Dijkstra)."""
 
 from __future__ import annotations
 
-from collections import Counter
+import heapq
+import math
+from collections import Counter, deque
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests.conftest import make_edges, make_vertices
@@ -78,6 +81,115 @@ def test_wcc_matches_union_find(spark, edges):
     e = make_edges(spark, edges)
     got = {r["id"]: r["comp"] for r in wcc(v, e).collect()}
     assert got == _wcc_oracle(N_VERTICES, edges)
+
+
+def _adjacency(n, edges, directed):
+    """Out-adjacency lists; undirected graphs store both orientations.
+    Parallel edges and self-loops stay in — the operators must cope."""
+    adj: dict[int, list] = {v: [] for v in range(n)}
+    for e in edges:
+        s, d, rest = e[0], e[1], e[2:]
+        adj[s].append((d, *rest))
+        if not directed:
+            adj[d].append((s, *rest))
+    return adj
+
+
+def _bfs_oracle(n, edges, source, directed, max_rounds):
+    """Level-order search with a deque; levels past ``max_rounds`` and
+    unreached vertices read INT64_MAX (bfs_auto_context.h:44)."""
+    from libgrape_lite_spark.operators.bfs import INT64_MAX
+
+    adj = _adjacency(n, edges, directed)
+    depth = {source: 0}
+    queue = deque([source])
+    while queue:
+        u = queue.popleft()
+        for (w,) in adj[u]:
+            if w not in depth:
+                depth[w] = depth[u] + 1
+                queue.append(w)
+    return {
+        v: depth[v] if v in depth and (max_rounds is None or depth[v] <= max_rounds)
+        else INT64_MAX
+        for v in range(n)
+    }
+
+
+def _sssp_oracle(n, edges, source, directed):
+    """Dijkstra with a binary heap; unreached vertices read +inf."""
+    adj = _adjacency(n, edges, directed)
+    dist = {v: math.inf for v in range(n)}
+    dist[source] = 0.0
+    heap = [(0.0, source)]
+    while heap:
+        du, u = heapq.heappop(heap)
+        if du > dist[u]:
+            continue
+        for w, wt in adj[u]:
+            if du + wt < dist[w]:
+                dist[w] = du + wt
+                heapq.heappush(heap, (dist[w], w))
+    return dist
+
+
+# a chain past the depth budget, with a self-loop, a parallel edge and
+# isolated vertices 6 and 7
+_CHAIN_EXAMPLE = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (2, 2), (1, 2)]
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    edges=edge_lists,
+    source=st.integers(0, N_VERTICES - 1),
+    directed=st.booleans(),
+    max_rounds=st.one_of(st.none(), st.integers(1, 3)),
+)
+@example(edges=_CHAIN_EXAMPLE, source=0, directed=False, max_rounds=2)
+@example(edges=_CHAIN_EXAMPLE, source=1, directed=True, max_rounds=None)
+def test_bfs_matches_deque_oracle(spark, edges, source, directed, max_rounds):
+    from libgrape_lite_spark.operators import bfs
+
+    v = make_vertices(spark, range(N_VERTICES))
+    e = make_edges(spark, edges)
+    got = {
+        r["id"]: r["depth"]
+        for r in bfs(
+            v, e, source=source, directed=directed, max_rounds=max_rounds
+        ).collect()
+    }
+    assert got == _bfs_oracle(N_VERTICES, edges, source, directed, max_rounds)
+
+
+# dyadic weights: every path sum is exact, so distances compare with ==
+_weights = st.lists(
+    st.sampled_from([0.5, 1.0, 2.5, 4.0]), min_size=14, max_size=14
+)
+
+
+@pytest.mark.parametrize("impl", ["dataframe", "auto"])
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    edges=edge_lists,
+    weights=_weights,
+    source=st.integers(0, N_VERTICES - 1),
+    directed=st.booleans(),
+)
+@example(
+    edges=_CHAIN_EXAMPLE, weights=[0.5, 1.0, 2.5, 4.0, 0.5, 1.0, 0.5] + [1.0] * 7,
+    source=0, directed=False,
+)
+def test_sssp_matches_dijkstra(spark, impl, edges, weights, source, directed):
+    from libgrape_lite_spark.operators import sssp
+
+    wedges = [(s, d, w) for (s, d), w in zip(edges, weights)]
+    v = make_vertices(spark, range(N_VERTICES))
+    e = make_edges(spark, wedges)
+    got = {
+        r["id"]: r["dist"]
+        for r in sssp(v, e, source=source, directed=directed, impl=impl).collect()
+    }
+    assert got == _sssp_oracle(N_VERTICES, wedges, source, directed)
 
 
 def test_lcc_matches_bruteforce(spark):

@@ -57,20 +57,18 @@ def test_pagerank_auto_hub_salting_stays_off_without_skew(spark):
 # --------------------------------------- BFS max_rounds is a depth bound
 def test_bfs_max_rounds_depth_bound_all_impls(spark):
     """One PIE superstep settles many levels; max_rounds must still bound
-    the returned DEPTHS (clamped back to unreached) so impl='auto', the
-    dense-switched push, and plain push agree (ADVICE r3)."""
+    the returned DEPTHS (clamped back to unreached), exactly as a
+    level-synchronous BFS stopped after max_rounds levels (ADVICE r3)."""
     from libgrape_lite_spark.operators import bfs
     from libgrape_lite_spark.operators.bfs import INT64_MAX
 
     v = make_vertices(spark, range(6))
     e = make_edges(spark, [(i, i + 1) for i in range(5)])
     expect = {0: 0, 1: 1, 2: 2, 3: INT64_MAX, 4: INT64_MAX, 5: INT64_MAX}
-    assert as_dict(bfs(v, e, source=0, max_rounds=2, impl="auto")) == expect
-    assert as_dict(bfs(v, e, source=0, max_rounds=2, impl="dataframe")) == expect
-    # and without a budget both settle the full chain
+    assert as_dict(bfs(v, e, source=0, max_rounds=2)) == expect
+    # and without a budget it settles the full chain
     full = {i: i for i in range(6)}
-    assert as_dict(bfs(v, e, source=0, impl="auto")) == full
-    assert as_dict(bfs(v, e, source=0, impl="dataframe")) == full
+    assert as_dict(bfs(v, e, source=0)) == full
 
 
 # --------------------------------------------- WCC adaptive push ↔ pull

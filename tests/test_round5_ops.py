@@ -1,6 +1,6 @@
 """Round-5 behaviors: bounded prepared-table cache (LRU + eviction
 unpersist), prepared_session lifecycle, degree-table supersede release,
-CDLP auto hub-salting (dataframe + kernel paths)."""
+CDLP auto hub-salting."""
 
 from __future__ import annotations
 
@@ -45,9 +45,7 @@ def test_prepared_cache_bounded_after_full_session(spark):
     wcc(v, e).collect()
     wcc(v, e, impl="dataframe").collect()
     cdlp(v, e, max_rounds=3).collect()
-    cdlp(v, e, max_rounds=3, impl="kernel").collect()
     bfs(v, e, source=1).collect()
-    bfs(v, e, source=1, impl="dataframe").collect()
     sssp(v, e, source=1).collect()
     sssp(v, e, source=1, impl="auto").collect()
     pagerank(v, e, max_rounds=3).collect()
@@ -174,26 +172,6 @@ def test_cdlp_auto_hub_salting_dataframe(spark):
     assert salted == plain
 
 
-def test_cdlp_auto_hub_salting_kernel(spark):
-    """VERDICT r4 #7 (kernel path): a hub dst is one cogroup key in the
-    plain layout; the salted layout spreads its edges over ~salts
-    fragments with labels replicated to match — identical labels."""
-    from libgrape_lite_spark.operators import cdlp
-    from libgrape_lite_spark.plans.superstep import IterationDriver
-
-    v, e = _power_law_graph(spark)
-    drv = IterationDriver(spark)
-    salted = as_dict(
-        cdlp(
-            v, e, max_rounds=4, impl="kernel", driver=drv,
-            hub_degree_factor=1.0, min_hub_degree=0,
-        )
-    )
-    assert drv.info["cdlp_hub_salts"] > 0
-    plain = as_dict(cdlp(v, e, max_rounds=4, impl="kernel", hub_salts=0))
-    assert salted == plain
-
-
 def test_cdlp_hub_salting_stays_off_without_skew(spark):
     """Default thresholds: a skew-free chain must NOT engage (the extra
     pass would only cost); explicit int hub_salts is honored as-is."""
@@ -205,9 +183,8 @@ def test_cdlp_hub_salting_stays_off_without_skew(spark):
     drv = IterationDriver(spark)
     r_auto = as_dict(cdlp(v, e, max_rounds=3, driver=drv))
     assert drv.info["cdlp_hub_salts"] == 0
-    # explicit salted runs agree on both paths even when detection is off
+    # an explicit salted run agrees even when detection is off
     assert as_dict(cdlp(v, e, max_rounds=3, hub_salts=4)) == r_auto
-    assert as_dict(cdlp(v, e, max_rounds=3, impl="kernel", hub_salts=4)) == r_auto
 
 
 def test_degree_stats_memoized_per_graph(spark):
@@ -305,7 +282,7 @@ def test_dedup_simhash_banded_complete_vs_bruteforce(spark):
 
 # --------------------------------------------- prepare_graph warm-up
 def test_prepare_graph_warms_every_operator_layout(spark):
-    """The bench protocol's guarantee: after prepare_graph(kernel=True),
+    """The bench protocol's guarantee: after prepare_graph,
     running every operator on the same graph hits the warmed layouts -
     the cache holds the SAME DataFrame objects afterwards (no rebuild,
     no eviction) and results are correct."""
@@ -315,10 +292,9 @@ def test_prepare_graph_warms_every_operator_layout(spark):
     v = make_vertices(spark, range(1, 8))
     e = make_edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (2, 6), (6, 7)])
 
-    layouts = prepare_graph(v, e, kernel=True)
+    layouts = prepare_graph(v, e)
     assert set(layouts) == {
-        "pie", "push", "push_weighted", "gather_src", "gather_dst",
-        "degree", "gather_dst_kernel",
+        "pie", "push", "push_weighted", "gather_src", "gather_dst", "degree",
     }
     cache = getattr(e, _PREP_CACHE_ATTR)
     before = {k: id(val[1] if isinstance(val, tuple) else val) for k, val in cache.items()}
@@ -327,9 +303,7 @@ def test_prepare_graph_warms_every_operator_layout(spark):
     wcc(v, e, impl="dataframe").collect()
     pagerank(v, e, max_rounds=2).collect()
     cdlp(v, e, max_rounds=2).collect()
-    cdlp(v, e, max_rounds=2, impl="kernel").collect()
     bfs(v, e, source=1).collect()
-    bfs(v, e, source=1, impl="auto").collect()
     sssp(v, e, source=1).collect()
     sssp(v, e, source=1, impl="auto").collect()
     lcc(v, e).collect()

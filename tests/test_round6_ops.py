@@ -252,7 +252,7 @@ def test_merge_edges_weight_only_delta_carries_topology_layouts(spark):
     base_pairs = [(1, 2, 1.0), (2, 3, 2.0), (3, 4, 1.0), (2, 5, 4.0)]
     base = make_edges(spark, base_pairs)
     v = make_vertices(spark, range(1, 6))
-    prepare_graph(v, base, num_fragments=4, kernel=True)
+    prepare_graph(v, base, num_fragments=4)
 
     delta = spark.createDataFrame(
         [("upd", 2, 3, 0.5)], "op string, src long, dst long, weight double"
@@ -263,7 +263,7 @@ def test_merge_edges_weight_only_delta_carries_topology_layouts(spark):
     assert carried, "weight-only delta should carry layouts"
     assert carried == set(mcache.borrowed)
     kinds = {k[0] for k in carried}
-    assert {"gather", "push", "gather_dst_kernel", "outdeg"} <= kinds
+    assert {"gather", "push", "outdeg"} <= kinds
     assert all(k[0] != "pie" for k in carried)
     assert all(not (k[0] == "push" and k[2]) for k in carried)
 

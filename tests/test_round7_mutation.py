@@ -66,7 +66,7 @@ def _mutated_graph(spark, directed):
 
     base = make_edges(spark, BASE_PAIRS)
     v = make_vertices(spark, range(1, 7))
-    prepare_graph(v, base, num_fragments=4, directed=directed, kernel=True)
+    prepare_graph(v, base, num_fragments=4, directed=directed)
     delta = spark.createDataFrame(
         MIXED_DELTA, "op string, src long, dst long, weight double"
     )
@@ -81,7 +81,6 @@ def test_patched_layouts_match_full_rebuild(spark, directed):
     scratch on a fresh table with the merged rows."""
     from libgrape_lite_spark.plans.kernels import (
         _PREP_CACHE_ATTR,
-        dst_kernel_adjacency_table,
         gather_adjacency_table,
         pie_fragment_table,
         push_adjacency_table,
@@ -90,7 +89,7 @@ def test_patched_layouts_match_full_rebuild(spark, directed):
     v, base, merged = _mutated_graph(spark, directed)
     pending = set(merged._lgls_pending_patches)
     kinds = {k[0] for k in pending}
-    assert {"push", "gather", "pie", "gather_dst_kernel"} <= kinds
+    assert {"push", "gather", "pie"} <= kinds
     assert merged._lgls_carried_layouts == ()
 
     fresh = _fresh_copy(spark, merged)
@@ -117,10 +116,6 @@ def test_patched_layouts_match_full_rebuild(spark, directed):
         (
             pie_fragment_table(merged, nf, bounds, directed=directed),
             pie_fragment_table(fresh, nf, bounds, directed=directed),
-        ),
-        (
-            dst_kernel_adjacency_table(merged, nf, directed=directed),
-            dst_kernel_adjacency_table(fresh, nf, directed=directed),
         ),
     ]
     for patched, rebuilt in comparisons:
@@ -264,7 +259,6 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
     coincidences that hid the bug)."""
     from libgrape_lite_spark.mutation import merge_edges
     from libgrape_lite_spark.plans.kernels import (
-        dst_kernel_adjacency_table,
         gather_adjacency_table,
         invalidate_prepared,
         pie_fragment_table,
@@ -275,7 +269,7 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
 
     base = make_edges(spark, [(1, 1, 0.5), (2, 3, 0.5), (3, 4, 1.5), (4, 2, 2.0)])
     v = make_vertices(spark, range(1, 7))
-    prepare_graph(v, base, num_fragments=4, directed=True, kernel=True)
+    prepare_graph(v, base, num_fragments=4, directed=True)
     delta = spark.createDataFrame(
         delta_rows, "op string, src long, dst long, weight double"
     )
@@ -290,7 +284,6 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
         lambda t: gather_adjacency_table(t, "src", True),
         lambda t: gather_adjacency_table(t, "dst", True),
         lambda t: pie_fragment_table(t, nf, bounds, directed=True),
-        lambda t: dst_kernel_adjacency_table(t, nf, directed=True),
     ):
         patched, rebuilt = build(merged), build(fresh)
         assert patched.columns == rebuilt.columns
