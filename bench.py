@@ -139,7 +139,6 @@ def main() -> None:
     conv_rounds = len(conv_drvs[-1].metrics)
 
     timed("wcc", lambda: wcc(vertices, edges))  # default impl = auto (PIE)
-    timed("wcc_dataframe", lambda: wcc(vertices, edges, impl="dataframe"))
     timed("cdlp", lambda: cdlp(vertices, edges, max_rounds=10))
     timed("bfs", lambda: bfs(vertices, edges, source=source_id))
     timed("sssp", lambda: sssp(vertices, edges, source=source_id))

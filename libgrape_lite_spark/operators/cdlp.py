@@ -25,8 +25,6 @@ label).
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -97,16 +95,7 @@ def cdlp(
         # plans/kernels.py gather_adjacency_table)
         adj = gather_adjacency_table(edges, "dst", directed)
 
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            step = 0
-            state = drv.materialize(vertices.select("id", F.col("id").alias("label")), step)
-
-        while step < max_rounds:
-            t0 = time.time()
-            step += 1
+        def superstep(state: DataFrame, step: int):
             # gather over out-adjacency: vertex u sees labels of its out-nbrs
             if hub_salts > 0:
                 # two-level vote count: per (voter, label, salt-of-dst)
@@ -136,8 +125,13 @@ def cdlp(
             new_state = state.join(top, "id", "left").select(
                 "id", F.coalesce("new_label", "label").alias("label")
             )
-            state = drv.materialize(new_state, step)
-            drv.log(step, -1, time.time() - t0, op="cdlp")
+            return new_state, {}
 
-    drv.finish()
+        state = drv.run(
+            lambda: vertices.select("id", F.col("id").alias("label")),
+            superstep,
+            max_rounds=max_rounds,
+            op="cdlp",
+        )
+
     return state.select("id", "label")

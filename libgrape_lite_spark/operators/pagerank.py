@@ -24,7 +24,8 @@ reference's adjacency-scan formulation coincides.
 Stop rules: fixed ``max_rounds`` (LDBC/golden parity, default 10 =
 ``--pr_mr``) AND optional ``tol`` — stop early when max|Δ(final-scale
 rank)| < tol (the north rule's 1e-6 convergence criterion), whichever
-first.
+first. The superstep loop is ``IterationDriver.run``; its ``active`` is
+the count of vertices whose delta is still ≥ tol.
 
 Spark plan per superstep: one join (edges ⋈ ranks on dst) + one shuffle
 groupBy(src).sum — map-side partial sums are the analog of the reference's
@@ -34,8 +35,6 @@ rides inside the state DataFrame so no extra join per round.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -104,17 +103,6 @@ def pagerank(
 
         # counts parallel edges (GetLocalOutDegree); memoized per graph
         deg = cached_degree_table(edges, vertices, adj, directed)
-        state = deg.select(
-            "id",
-            "degree",
-            F.when(F.col("degree") > 0, p / F.col("degree")).otherwise(p).alias("r"),
-        )
-        step = 0
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            state = drv.materialize(state, step)
         # one aggregate pass PER GRAPH (memoized) yields the dangling count
         # AND the degree stats the auto hub-salt decision needs
         from libgrape_lite_spark.plans.kernels import cached_degree_stats, hub_salt_verdict
@@ -127,18 +115,18 @@ def pagerank(
                 spark, max_deg, sum_deg, hub_degree_factor, min_hub_degree
             )
         drv.info["pagerank_hub_salts"] = hub_salts
-        dangling_sum = p * n_dangling
-        # replay the driver-side scalar recurrence up to the resumed superstep
-        for _ in range(step):
-            base = (1.0 - d) / n + d * dangling_sum / n
-            dangling_sum = base * n_dangling
 
-        while step < max_rounds:
-            t0 = time.time()
-            step += 1
-            base = (1.0 - d) / n + d * dangling_sum / n
-            dangling_sum = base * n_dangling
+        def base_of(step: int) -> float:
+            # the driver-side scalar recurrence, replayed from round 1 so a
+            # resumed run computes the same scalars as an uninterrupted one
+            dangling_sum = p * n_dangling
+            for _ in range(step):
+                base = (1.0 - d) / n + d * dangling_sum / n
+                dangling_sum = base * n_dangling
+            return base
 
+        def superstep(state: DataFrame, step: int):
+            base = base_of(step)
             if hub_salts > 0:
                 contrib = adj.join(
                     state.select(F.col("id").alias("src"), "r"), "src"
@@ -177,25 +165,31 @@ def pagerank(
                 .join(gathered, "id", "left")
                 .select("id", "degree", new_r, *(["prev_r"] if tol is not None else []))
             )
-            if tol is not None:
-                # convergence on final-scale ranks: |Δ(r*deg)| for non-dangling,
-                # |Δr| for dangling (degree multiplier applied at output).
-                # The max-delta scalar rides the materializing job
-                # (observe) instead of a second per-round collect job.
-                scale = F.when(F.col("degree") > 0, F.col("degree")).otherwise(F.lit(1.0))
-                state, m = drv.materialize_observed(
-                    new_state, step,
-                    F.max(F.abs((F.col("r") - F.col("prev_r")) * scale)).alias("md"),
-                )
-                max_delta = m["md"]
-                drv.log(step, n, time.time() - t0, op="pagerank", max_delta=max_delta)
-                if max_delta is not None and max_delta < tol:
-                    break
-            else:
-                state = drv.materialize(new_state, step)
-                drv.log(step, n, time.time() - t0, op="pagerank")
+            if tol is None:
+                return new_state, {}
+            # convergence on final-scale ranks: |Δ(r*deg)| for non-dangling,
+            # |Δr| for dangling (degree multiplier applied at output). The
+            # max delta is below tol exactly when no vertex's delta is at or
+            # above it, so that count is the stop test; both ride the
+            # materializing job.
+            scale = F.when(F.col("degree") > 0, F.col("degree")).otherwise(F.lit(1.0))
+            delta = F.abs((F.col("r") - F.col("prev_r")) * scale)
+            return new_state, {
+                "active": F.count(F.when(delta >= tol, True)),
+                "max_delta": F.max(delta),
+            }
 
-    drv.finish()
+        state = drv.run(
+            lambda: deg.select(
+                "id",
+                "degree",
+                F.when(F.col("degree") > 0, p / F.col("degree")).otherwise(p).alias("r"),
+            ),
+            superstep,
+            max_rounds=max_rounds,
+            op="pagerank",
+        )
+
     # multiply back by degree for non-dangling (pagerank.h:202-214)
     return state.select(
         "id",
@@ -248,37 +242,32 @@ def pagerank_local(
         # degree is layout-invariant, so this shares pagerank's entry
         deg = cached_degree_table(edges, vertices, adj, directed)
         d = damping
-        state = deg.select(
-            "id",
-            "degree",
-            F.when(F.col("degree") > 0, 1.0 / F.col("degree")).otherwise(1.0).alias("r"),
-        )
-        step = 0
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            state = drv.materialize(state, step)
 
-        while step < max_rounds:
-            t0 = time.time()
-            step += 1
-            last = step == max_rounds
+        def superstep(state: DataFrame, step: int):
+            # the state keeps each round's undivided value ``x`` and the
+            # out-degree division happens on the gather side, so every
+            # committed superstep has the same form and a resumed run
+            # continues exactly; the last round's ``x`` is the output
+            r = F.when(F.col("degree") > 0, F.col("x") / F.col("degree")).otherwise(F.col("x"))
             gathered = (
-                adj.join(state.select(F.col("id").alias("dst"), "r"), "dst")
+                adj.join(state.select(F.col("id").alias("dst"), r.alias("r")), "dst")
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.sum("r").alias("g"))
             )
-            nxt = F.lit(1.0) - d + d * F.coalesce("g", F.lit(0.0))
-            if not last:
-                nxt = F.when(F.col("degree") > 0, nxt / F.col("degree")).otherwise(nxt)
+            x = F.lit(1.0) - d + d * F.coalesce("g", F.lit(0.0))
             new_state = (
                 state.select("id", "degree")
                 .join(gathered, "id", "left")
-                .select("id", "degree", nxt.alias("r"))
+                .select("id", "degree", x.alias("x"))
             )
-            state = drv.materialize(new_state, step)
-            drv.log(step, 0, time.time() - t0, op="pagerank_local")
+            return new_state, {}
 
-    drv.finish()
-    return state.select("id", F.col("r").alias("rank"))
+        # x0 = 1 gives r0 = outdeg > 0 ? 1/outdeg : 1 (pagerank_local.h:57-60)
+        state = drv.run(
+            lambda: deg.select("id", "degree", F.lit(1.0).alias("x")),
+            superstep,
+            max_rounds=max_rounds,
+            op="pagerank_local",
+        )
+
+    return state.select("id", F.col("x").alias("rank"))

@@ -16,8 +16,6 @@ shuffle exactly like the reference's per-fragment dedup of messages.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -47,7 +45,10 @@ def sssp(
     (plans/kernels.py:local_relax_fixpoint); a shortest path confined to a
     fragment settles in one superstep, so global rounds count only the
     cross-fragment hops. ``"dataframe"`` (default) is the frontier push —
-    better when frontiers are tiny relative to fragments.
+    better when frontiers are tiny relative to fragments. Paired runs on
+    4 cores (BENCH/runs/wcc_sssp_ab_1792300951.json): undirected, the
+    push tied at sf0.01 (5/10) and won 8/10 at sf0.1; directed, ``auto``
+    won 10/10 at both scales, ~8× faster.
     """
     if impl not in ("dataframe", "auto"):
         raise ValueError(f"impl must be dataframe|auto, got {impl!r}")
@@ -65,51 +66,50 @@ def sssp(
 
         adj = push_adjacency_table(edges, directed=directed, weighted=True)
 
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            step = 0
-            state = drv.materialize(
-                spark.createDataFrame([(source, 0.0, True)], "id long, dist double, improved boolean"),
-                step,
-            )
-
-        while max_rounds is None or step < max_rounds:
-            t0 = time.time()
-            step += 1
+        def superstep(state: DataFrame, step: int):
             frontier = state.where("improved").select("id", "dist")
             cand = (
                 adj.join(frontier.withColumnRenamed("id", "src"), "src")
                 .select(F.col("dst").alias("id"), (F.col("dist") + F.col("weight")).alias("nd"))
                 .groupBy("id")
-                .agg(F.min("nd").alias("nd"))
+                .agg(F.min("nd").alias("gathered"))
             )
-            new_state = (
-                state.select("id", "dist")
-                .join(cand, "id", "full")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.lit(float("inf"))),
-                        F.coalesce("nd", F.lit(float("inf"))),
-                    ).alias("dist"),
-                    (
-                        F.col("nd").isNotNull()
-                        & (F.col("nd") < F.coalesce("dist", F.lit(float("inf"))))
-                    ).alias("improved"),
-                )
-            )
-            # termination count rides the materializing job (observe)
-            state, m = drv.materialize_observed(
-                new_state, step, F.count(F.when(F.col("improved"), True)).alias("active")
-            )
-            active = m["active"]
-            drv.log(step, active, time.time() - t0, op="sssp")
-            if active == 0:
-                break
+            return _improve(state, cand)
 
-    drv.finish()
+        state = drv.run(
+            lambda: _source_state(spark, source), superstep, max_rounds=max_rounds, op="sssp"
+        )
+    return _distances(vertices, state)
+
+
+def _source_state(spark, source: int) -> DataFrame:
+    return spark.createDataFrame(
+        [(source, 0.0, True)], "id long, dist double, improved boolean"
+    )
+
+
+def _improve(state: DataFrame, cand: DataFrame):
+    """One superstep's merge of candidate distances ``cand(id, gathered)``
+    (the atomic_min, sssp.h:118-124): keep the smaller distance; vertices
+    whose candidate won are the next frontier, and their count is the
+    termination aggregate."""
+    inf = F.lit(float("inf"))
+    new_state = (
+        state.select("id", "dist")
+        .join(cand, "id", "full")
+        .select(
+            "id",
+            F.least(F.coalesce("dist", inf), F.coalesce("gathered", inf)).alias("dist"),
+            (
+                F.col("gathered").isNotNull()
+                & (F.col("gathered") < F.coalesce("dist", inf))
+            ).alias("improved"),
+        )
+    )
+    return new_state, {"active": F.count(F.when(F.col("improved"), True))}
+
+
+def _distances(vertices: DataFrame, state: DataFrame) -> DataFrame:
     return (
         vertices.select("id")
         .join(state.select("id", "dist"), "id", "left")
@@ -135,8 +135,6 @@ def _sssp_auto(
     fragment table (BFS passes both, derived from the memo on its original
     edge table, since the unit-weight view it takes would otherwise be a
     fresh object the per-table cache can't see)."""
-    import time as _time
-
     from libgrape_lite_spark.plans.kernels import (
         cached_edge_balanced_bounds,
         local_relax_fixpoint,
@@ -160,48 +158,16 @@ def _sssp_auto(
             else pie_fragment_table(edges, nf, bounds, directed=directed)
         )
 
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            step = 0
-            state = drv.materialize(
-                spark.createDataFrame([(source, 0.0, True)], "id long, dist double, improved boolean"),
-                step,
-            )
-
-        while max_rounds is None or step < max_rounds:
-            t0 = _time.time()
-            step += 1
+        def superstep(state: DataFrame, step: int):
             cand = local_relax_fixpoint(
                 adj, state.select("id", "dist"), "dist", nf, bounds=bounds
             )
-            new_state = (
-                state.select("id", "dist")
-                .join(cand, "id", "full")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.lit(float("inf"))),
-                        F.coalesce("gathered", F.lit(float("inf"))),
-                    ).alias("dist"),
-                    (
-                        F.col("gathered").isNotNull()
-                        & (F.col("gathered") < F.coalesce("dist", F.lit(float("inf"))))
-                    ).alias("improved"),
-                )
-            )
-            state, m = drv.materialize_observed(
-                new_state, step, F.count(F.when(F.col("improved"), True)).alias("active")
-            )
-            active = m["active"]
-            drv.log(step, active, _time.time() - t0, op="sssp_auto")
-            if active == 0:
-                break
+            return _improve(state, cand)
 
-    drv.finish()
-    return (
-        vertices.select("id")
-        .join(state.select("id", "dist"), "id", "left")
-        .select("id", F.coalesce("dist", F.lit(float("inf"))).alias("dist"))
-    )
+        state = drv.run(
+            lambda: _source_state(spark, source),
+            superstep,
+            max_rounds=max_rounds,
+            op="sssp_auto",
+        )
+    return _distances(vertices, state)

@@ -2,12 +2,16 @@
 
 Reference lifecycle (grape/worker/worker.h:87-133): ``ctx.Init`` → ``PEval``
 → repeat ``IncEval`` until the message manager's global
-count-of-messages-sent is zero (default_message_manager.h:324-350). Here:
+count-of-messages-sent is zero (default_message_manager.h:324-350). Here
+:meth:`IterationDriver.run` is that one loop, and every iterative operator
+(pagerank, pagerank_local, cdlp, wcc, sssp, bfs, run_vertex_program)
+supplies only its per-round algebra:
 
 * one superstep  = one Spark job over the state DataFrame,
-* termination    = ``active == 0`` (the count of the delta DataFrame — the
-  exact Spark analog of "no worker sent any message"),
-* ``ForceContinue`` = the operator returning ``active > 0`` explicitly,
+* termination    = ``active == 0``, an aggregate the operator names that
+  rides the materializing job (the exact Spark analog of "no worker sent
+  any message"), or the round budget for fixed-round apps,
+* ``ForceContinue`` = the operator's ``active`` aggregate staying > 0,
 * per-round logging (worker.h:106-127) = the lineage/metrics rows this
   driver records per superstep and writes to a table.
 
@@ -20,44 +24,44 @@ mutable arrays but Spark does not:
 2. **Resumability** (north rule): every ``checkpoint_every`` supersteps the
    state DataFrame is written to ``<checkpoint_dir>/<run>/step=<k>`` as
    parquet (stand-in for an Iceberg table — same layout, transactional
-   commit via _SUCCESS marker). ``resume()`` restarts a killed run from the
-   max committed superstep.
+   commit via _SUCCESS marker). :meth:`IterationDriver.run` restarts a
+   killed run from the max committed superstep.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 
 @dataclass
 class SuperstepMetric:
     run_id: str
     superstep: int
-    active: int
+    active: int | None  # None: a fixed-round app observes no stop count
     t_ms: float
     extra: dict = field(default_factory=dict)
 
 
 class IterationDriver:
-    """Owns materialization, termination bookkeeping, checkpoints, metrics.
+    """Owns the superstep loop: materialization, termination, resume,
+    checkpoints, metrics.
 
     Usage inside an operator::
 
         drv = driver or IterationDriver(spark)
-        state = drv.materialize(init_state, step=0)
-        while True:
-            t0 = time.time()
-            new_state, active = one_superstep(state)
-            state = drv.materialize(new_state, step)
-            drv.log(step, active, time.time() - t0)
-            if active == 0:
-                break
-        drv.finish()
+
+        def superstep(state, step):
+            new_state = ...  # one round of lazy DataFrame algebra
+            return new_state, {"active": F.count(F.when(F.col("changed"), True))}
+
+        state = drv.run(lambda: init_state, superstep, max_rounds=max_rounds, op="wcc")
     """
 
     def __init__(
@@ -91,6 +95,58 @@ class IterationDriver:
         self.info: dict = {}
         # (state DataFrame, pinned JVM RDD ids captured at materialize)
         self._persisted: list[tuple[DataFrame, tuple[int, ...]]] = []
+
+    # -- the loop ----------------------------------------------------------
+    def run(
+        self,
+        init: Callable[[], DataFrame],
+        superstep: Callable[[DataFrame, int], tuple[DataFrame, dict[str, Column]]],
+        *,
+        max_rounds: int | None = None,
+        op: str,
+        settle: Callable[[DataFrame, DataFrame, int, dict], tuple[DataFrame, int]]
+        | None = None,
+    ) -> DataFrame:
+        """Drive one iterative app to its fixpoint; returns the final
+        materialized state.
+
+        Resumes from :meth:`latest_checkpoint` when one is committed,
+        otherwise materializes ``init()`` as superstep 0. Each round
+        ``superstep(state, step)`` returns the new lazy state plus named
+        aggregate Columns; they ride the materializing job
+        (:meth:`materialize_observed`) and their values go into the
+        round's log ``extra``. No aggregates (a fixed-round app) = a plain
+        :meth:`materialize`. ``settle(prev, state, step, observed)``, when
+        given, runs after materialization and returns ``(state, active)``
+        — for a stop test that needs the materialized state (set
+        stability) or a between-rounds mutation. The loop stops when
+        ``active`` is 0 or after ``max_rounds`` supersteps.
+        """
+        resumed = self.latest_checkpoint()
+        if resumed is not None:
+            state, step = resumed
+        else:
+            step = 0
+            state = self.materialize(init(), step)
+        while max_rounds is None or step < max_rounds:
+            t0 = time.time()
+            step += 1
+            prev = state
+            new_state, aggs = superstep(state, step)
+            if aggs:
+                state, observed = self.materialize_observed(
+                    new_state, step, *(c.alias(k) for k, c in aggs.items())
+                )
+            else:
+                state, observed = self.materialize(new_state, step), {}
+            if settle is not None:
+                state, observed["active"] = settle(prev, state, step, observed)
+            active = observed.pop("active", None)
+            self.log(step, active, time.time() - t0, op=op, **observed)
+            if active == 0:
+                break
+        self.finish()
+        return state
 
     # -- state materialization -------------------------------------------
     def materialize(self, df: DataFrame, step: int) -> DataFrame:
@@ -193,8 +249,10 @@ class IterationDriver:
         return self.spark.read.parquet(self._step_path(step)), step
 
     # -- metrics / lineage --------------------------------------------------
-    def log(self, superstep: int, active: int, t_sec: float, **extra) -> None:
-        m = SuperstepMetric(self.run_id, superstep, int(active), t_sec * 1000.0, extra)
+    def log(self, superstep: int, active: int | None, t_sec: float, **extra) -> None:
+        if active is not None:
+            active = int(active)
+        m = SuperstepMetric(self.run_id, superstep, active, t_sec * 1000.0, extra)
         self.metrics.append(m)
         if self.verbose:
             print(

@@ -14,9 +14,12 @@ worker loop worker.h:87-133). The Spark-native contract:
   (IncEval's per-vertex update; the changed-count is the termination test —
   "no messages sent" ⇔ no vertex changed)
 
-The driver loop, lineage truncation, checkpoint/resume and metrics come
-from :class:`~libgrape_lite_spark.plans.superstep.IterationDriver` — user
-code never touches iteration mechanics, exactly like the reference.
+The loop itself is :meth:`~libgrape_lite_spark.plans.superstep.IterationDriver.run`,
+the same one every built-in iterative operator runs on: lineage
+truncation, checkpoint/resume, metrics, and the changed-count stop test,
+which rides each superstep's materializing job (no separate count job).
+A ``mutate`` hook runs after each superstep is materialized. User code
+never touches iteration mechanics, exactly like the reference.
 
 ``tests/test_vertex_program.py`` re-expresses WCC and SSSP as programs and
 checks them against the dedicated operators.
@@ -24,7 +27,6 @@ checks them against the dedicated operators.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -98,25 +100,19 @@ def run_vertex_program(
     adjacency and state before the next round (None = no mutation)."""
     spark = vertices.sparkSession
     drv = driver or IterationDriver(spark)
+    merge_fn = _MERGE[program.merge]
 
     with static_plans(spark):
         adj = edges if program.directed else undirected(edges)
         adj = adj.repartition("src").localCheckpoint(eager=True)
 
-        resumed = drv.latest_checkpoint()
-        if resumed is not None:
-            state, step = resumed
-        else:
-            step = 0
-            init = program.init(vertices, edges)
-            if "changed" not in init.columns:
-                init = init.withColumn("changed", F.lit(True))
-            state = drv.materialize(init, step)
+        def init() -> DataFrame:
+            state = program.init(vertices, edges)
+            if "changed" not in state.columns:
+                state = state.withColumn("changed", F.lit(True))
+            return state
 
-        merge_fn = _MERGE[program.merge]
-        while max_rounds is None or step < max_rounds:
-            t0 = time.time()
-            step += 1
+        def superstep(state: DataFrame, step: int):
             senders = state.where("changed") if program.frontier_only else state
             joined = adj.join(senders.withColumnRenamed("id", "src"), "src")
             msgs = (
@@ -124,21 +120,27 @@ def run_vertex_program(
                 .groupBy("id")
                 .agg(merge_fn("m").alias("msg"))
             )
-            new_state = program.apply(state, msgs)
-            state = drv.materialize(new_state, step)
-            active = state.where("changed").count()
+            return program.apply(state, msgs), {
+                "active": F.count(F.when(F.col("changed"), True))
+            }
 
-            mut = mutate(step, state) if mutate is not None else None
+        def apply_mutation(prev: DataFrame, state: DataFrame, step: int, observed: dict):
+            nonlocal adj
+            active = observed["active"]
+            mut = mutate(step, state)
             if mut is not None:
                 adj, state = _apply_mutation(program, adj, state, mut)
                 state = drv.materialize(state, step)
                 active = max(active, state.where("changed").count())
+            return state, active
 
-            drv.log(step, active, time.time() - t0, op="vertex_program")
-            if active == 0:
-                break
-
-    drv.finish()
+        state = drv.run(
+            init,
+            superstep,
+            max_rounds=max_rounds,
+            op="vertex_program",
+            settle=apply_mutation if mutate is not None else None,
+        )
     return state.drop("changed")
 
 

@@ -99,7 +99,7 @@ def main() -> int:
     hop = adj.join(frontier, "src").select("dst")
     p3 = plan_of(hop)
     results.append(("small frontier broadcast join", "BroadcastHashJoin" in p3, "see plan"))
-    sections.append(("Frontier expansion (sssp/wcc push)", p3))
+    sections.append(("Frontier expansion (sssp push)", p3))
 
     # 5. embedding dedup (LSH path): no cartesian / nested-loop join
     from libgrape_lite_spark.operators.dedup import dedup_embedding_cosine, dedup_minhash

@@ -12,7 +12,6 @@ Writes <out_dir>/<name>_<suffix>.txt for:
   - pagerank_local_superstep
   - cdlp_superstep       (dataframe vote count)
   - pie_superstep        (wcc/sssp auto and bfs local-fixpoint cogroup)
-  - wcc_df_superstep     (push gather + pointer jump)
   - sssp_superstep       (frontier relax)
   - lcc_plan             (triangle intersect pipeline)
   - mutation_patch       (pure-removal layout patch)
@@ -95,7 +94,6 @@ def main() -> None:
         pie = pie_fragment_table(edges, nf, bounds, directed=False)
         gsrc = gather_adjacency_table(edges, "src", False)
         gdst = gather_adjacency_table(edges, "dst", False)
-        push_u = push_adjacency_table(edges, directed=False, weighted=False)
         push_w = push_adjacency_table(edges, directed=False, weighted=True)
         deg = cached_degree_table(edges, vertices, gsrc, False)
 
@@ -157,25 +155,6 @@ def main() -> None:
         plans["pie_superstep"] = plan_of(
             local_min_fixpoint(pie_adj, lab.select("id", F.col("label").alias("comp")),
                                "comp", nf, bounds=bounds)
-        )
-
-        comp_state = state.select(
-            "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
-        ).localCheckpoint(eager=True)
-        senders = comp_state.select(F.col("id").alias("src"), "comp")
-        nbr_min = (
-            push_u.join(senders, "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        half = comp_state.select("id", F.col("comp").alias("comp0")).join(
-            nbr_min, "id", "left"
-        ).select("id", "comp0", F.least("comp0", F.coalesce("nbr_comp", "comp0")).alias("comp"))
-        jump_map = half.select(F.col("id").alias("comp"), F.col("comp").alias("comp2"))
-        plans["wcc_df_superstep"] = plan_of(
-            half.join(jump_map, "comp", "left").select(
-                "id", F.least("comp", F.coalesce("comp2", "comp")).alias("comp")
-            )
         )
 
         # mid-loop-shaped state: id-hash partitioned + id-ordered, like the

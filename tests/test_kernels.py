@@ -21,21 +21,23 @@ def test_lcc_wedge_equals_intersect(spark):
 
 
 def test_wcc_auto_equals_dataframe(spark):
-    """PIE local-fixpoint kernel (impl='auto') matches the join fixpoint on
-    a multi-chain + cross-link graph (chains exercise the local collapse)."""
+    """PIE local-fixpoint kernel (impl='auto') matches a union-find oracle
+    on a multi-chain + cross-link graph (chains exercise the local
+    collapse)."""
     from libgrape_lite_spark.operators import wcc
     from tests.conftest import make_edges, make_vertices
+    from tests.test_property_oracles import _wcc_oracle
 
     # two long chains + a bridge + an isolated pair + a self-loop
     edges = [(i, i + 1) for i in range(0, 19)] + [(30, 31), (5, 40), (40, 41), (7, 7)]
     ids = sorted({x for e in edges for x in e})
     v, e = make_vertices(spark, ids), make_edges(spark, edges)
-    want = {r["id"]: r["comp"] for r in wcc(v, e, impl="dataframe").collect()}
+    want = {i: c for i, c in _wcc_oracle(max(ids) + 1, edges).items() if i in ids}
     got = {r["id"]: r["comp"] for r in wcc(v, e, impl="auto", num_fragments=4).collect()}
     assert got == want
 
 
-@pytest.mark.parametrize("impl", ["auto", "dataframe", "twostar"])
+@pytest.mark.parametrize("impl", ["auto", "twostar"])
 def test_wcc_long_ids_past_2_53(spark, impl):
     """Component ids above 2^53 survive exactly in every impl (a path
     through double would round them)."""
@@ -50,23 +52,14 @@ def test_wcc_long_ids_past_2_53(spark, impl):
     assert got == {base: base, base + 1: base, base + 3: base + 3}
 
 
-def test_wcc_jump_off_equals_on(spark):
-    """Pointer jumping (``jump``, a dataframe-impl option) changes only the
-    superstep count: same labels, fewer rounds on a long chain."""
+def test_wcc_rejects_removed_impl(spark):
+    """The frontier-push impl is gone: asking for it fails loudly instead
+    of silently running the default."""
     from libgrape_lite_spark.operators import wcc
-    from libgrape_lite_spark.plans.superstep import IterationDriver
-    from tests.conftest import make_edges, make_vertices
 
-    edges = [(i, i + 1) for i in range(0, 12)] + [(3, 20), (20, 21)]
-    ids = sorted({x for e in edges for x in e})
-    v, e = make_vertices(spark, ids), make_edges(spark, edges)
-    on, off = IterationDriver(spark), IterationDriver(spark)
-    a = {r["id"]: r["comp"] for r in
-         wcc(v, e, impl="dataframe", jump=True, driver=on).collect()}
-    b = {r["id"]: r["comp"] for r in
-         wcc(v, e, impl="dataframe", jump=False, driver=off).collect()}
-    assert a == b
-    assert len(on.metrics) < len(off.metrics)
+    v, e = make_vertices(spark, [0, 1]), make_edges(spark, [(0, 1)])
+    with pytest.raises(ValueError, match="auto|twostar"):
+        wcc(v, e, impl="dataframe")
 
 
 def test_sssp_auto_equals_dataframe(spark):

@@ -72,14 +72,15 @@ def test_cdlp_matches_oracle(spark, edges, rounds):
     assert got == _cdlp_oracle(N_VERTICES, edges, rounds)
 
 
+@pytest.mark.parametrize("impl", ["auto", "twostar"])
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edge_lists)
-def test_wcc_matches_union_find(spark, edges):
+def test_wcc_matches_union_find(spark, edges, impl):
     from libgrape_lite_spark.operators import wcc
 
     v = make_vertices(spark, range(N_VERTICES))
     e = make_edges(spark, edges)
-    got = {r["id"]: r["comp"] for r in wcc(v, e).collect()}
+    got = {r["id"]: r["comp"] for r in wcc(v, e, impl=impl).collect()}
     assert got == _wcc_oracle(N_VERTICES, edges)
 
 

@@ -1,5 +1,5 @@
 """Round-4 operator behaviors: auto hub-salting, BFS max_rounds
-depth-bound semantics, WCC adaptive push/pull rounds."""
+depth-bound semantics, WCC two-star rounds, shared prepared tables."""
 
 from __future__ import annotations
 
@@ -69,20 +69,6 @@ def test_bfs_max_rounds_depth_bound_all_impls(spark):
     # and without a budget it settles the full chain
     full = {i: i for i in range(6)}
     assert as_dict(bfs(v, e, source=0)) == full
-
-
-# --------------------------------------------- WCC adaptive push ↔ pull
-def test_wcc_pull_and_push_rounds_agree(spark):
-    """Forced always-pull (pull_fraction=0) and effectively-always-push
-    (pull_fraction=1) must both reach the reference fixpoint — the switch
-    is a cost trade, never a semantics change (wcc.h:198-209)."""
-    from libgrape_lite_spark.operators import wcc
-
-    v = make_vertices(spark, range(8))
-    e = make_edges(spark, [(0, 1), (1, 2), (2, 3), (4, 5), (5, 6)])
-    expect = {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 4, 6: 4, 7: 7}
-    assert as_dict(wcc(v, e, impl="dataframe", pull_fraction=0.0)) == expect
-    assert as_dict(wcc(v, e, impl="dataframe", pull_fraction=1.0)) == expect
 
 
 # ------------------------------ shared prepared-table cache correctness

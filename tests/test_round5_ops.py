@@ -43,7 +43,6 @@ def test_prepared_cache_bounded_after_full_session(spark):
     e = make_edges(spark, pairs)
 
     wcc(v, e).collect()
-    wcc(v, e, impl="dataframe").collect()
     cdlp(v, e, max_rounds=3).collect()
     bfs(v, e, source=1).collect()
     sssp(v, e, source=1).collect()
@@ -300,7 +299,6 @@ def test_prepare_graph_warms_every_operator_layout(spark):
     before = {k: id(val[1] if isinstance(val, tuple) else val) for k, val in cache.items()}
 
     r_wcc = as_dict(wcc(v, e))
-    wcc(v, e, impl="dataframe").collect()
     pagerank(v, e, max_rounds=2).collect()
     cdlp(v, e, max_rounds=2).collect()
     bfs(v, e, source=1).collect()
