@@ -169,9 +169,12 @@ def undirected(edges: DataFrame) -> DataFrame:
 
 def out_degrees(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
     """DataFrame(id, degree) — out-degree per vertex, counting parallel
-    edges. If ``vertices`` given, zero-degree vertices are included
-    (dangling vertices matter for PageRank, pagerank.h:74-88)."""
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("degree"))
+    edges: one per row, or ``cnt`` per row on a pair-aggregated adjacency
+    (plans/kernels.py adjacency_table). If ``vertices`` given, zero-degree
+    vertices are included (dangling vertices matter for PageRank,
+    pagerank.h:74-88)."""
+    n = F.sum("cnt") if "cnt" in edges.columns else F.count(F.lit(1))
+    deg = edges.groupBy(F.col("src").alias("id")).agg(n.alias("degree"))
     if vertices is not None:
         deg = (
             vertices.select("id")

@@ -13,37 +13,41 @@ shuffle. :func:`merge_edges` closes the gap in two tiers:
   **zero wide shuffles** — removal is an anti-join against the
   (broadcast, delta-sized) removal set, weight update a delta-broadcast
   left join, addition a union — then pinned;
-* prepared layouts **carry or patch** instead of rebuilding:
+* prepared layouts **carry, patch or rebuild from the patch**:
 
-  - layouts whose inputs the delta did not touch carry over borrowed
-    (weight-only delta → every topology-derived layout);
-  - layouts the delta DOES touch get a **pending patch**: a lazy thunk,
-    registered in the merged table's prep cache and run on first use,
-    that derives the new layout from the base's pinned layout — broadcast
-    anti-joins remove deleted rows, the delta-sized set of TOUCHED
-    (src, dst) pairs is recomputed from the merged table, and only the
-    final co-partitioning shuffle is re-paid (zero shuffles for a
-    pure-removal delta: broadcast anti-joins preserve the base layout's
-    partitioning — except the usually-empty set of del pairs whose
-    reverse-stored orientation survives in the merged table, which
-    undirected layouts must recompute, not anti-join away).
+  - layouts the delta did not touch carry over borrowed (a weight-only
+    delta → the degree table and the directed by-dst copy);
+  - the graph's one adjacency (plans/kernels.py adjacency_table) gets a
+    **pending patch**: a lazy thunk, registered in the merged table's
+    prep cache and run on first use, that derives the new adjacency from
+    the base's pinned one — broadcast anti-joins remove deleted rows, the
+    delta-sized set of TOUCHED (src, dst) pairs is re-aggregated (min
+    weight, ``cnt``) from the merged table, and only the final
+    co-partitioning shuffle is re-paid (zero shuffles for a pure-removal
+    delta: broadcast anti-joins preserve the base layout's partitioning
+    — except the usually-empty set of del pairs whose reverse-stored
+    orientation survives in the merged table, which the undirected
+    adjacency must recompute, not anti-join away).
     This is the Spark shape of the reference's
     patch-only-affected-CSR-segments (mutable_edgecut_fragment.h:191-260):
     untouched rows never leave their blocks' lineage, the delta-sized
-    frontier is rebuilt exactly.
+    frontier is rebuilt exactly;
+  - every other layout (PIE fragment table, degree table, by-dst copy)
+    is built from the adjacency, so it rebuilds on first use from the
+    patched one — the same single pass or shuffle a patch would cost.
 
 * fragment BOUNDS always carry: they are a layout choice, not semantics
   (any strictly-increasing boundaries give correct fragments), and
   approximate edge-count quantiles stay balanced under a small delta.
   Degree stats do NOT carry on topology change (they feed PageRank's
   dangling-mass scalar — semantics); they recompute lazily with one
-  aggregate over the PATCHED gather layout, which is narrow.
+  aggregate over the PATCHED adjacency, which is narrow.
 
 Ownership: carried layouts stay owned by the base table's cache
 (``_PrepCache.borrowed``); PATCHED layouts are fresh checkpoints owned by
 the merged table's cache. Either way the merged table holds a strong
 reference to the base (``_lgls_mutation_base``) so the base's drop-time
-finalizer cannot fire while a pending thunk still reads its layouts.
+finalizer cannot fire while a pending thunk still reads its adjacency.
 """
 
 from __future__ import annotations
@@ -58,7 +62,7 @@ from libgrape_lite_spark.plans.kernels import (
     _pinned_rdd_ids,
     _prep_cache,
     _prep_put,
-    segment_part_bounds,
+    pair_aggregate,
 )
 
 #: ops understood by merge_edges, mirroring the reference Mutation fields:
@@ -73,6 +77,18 @@ MUTATION_OPS = ("add", "del", "upd", "delv")
 #: edges are separate tables in this engine, so full Mutate parity is
 #: merge_edges(edges, delta) + merge_vertices(vertices, vdelta).
 VERTEX_MUTATION_OPS = ("addv", "updv", "delv")
+
+
+def _op_set(delta: DataFrame, allowed: tuple, what: str) -> set:
+    """The delta's distinct ops — one collect, which :func:`mutate` runs
+    once and hands to both sides."""
+    if "op" not in delta.columns:
+        raise ValueError(f"delta needs an 'op' column ({'|'.join(allowed)})")
+    ops = {r["op"] for r in delta.select("op").distinct().collect()}
+    unknown = ops - set(allowed)
+    if unknown:
+        raise ValueError(f"unknown {what}: {sorted(unknown)}")
+    return ops
 
 
 def merge_vertices(base_vertices: DataFrame, delta: DataFrame) -> DataFrame:
@@ -93,12 +109,11 @@ def merge_vertices(base_vertices: DataFrame, delta: DataFrame) -> DataFrame:
     table; pass the matching ``delv`` rows to :func:`merge_edges` for the
     incident-edge removal (the reference does both inside one Mutate).
     """
-    if "op" not in delta.columns:
-        raise ValueError("delta needs an 'op' column (addv|updv|delv)")
-    ops = {r["op"] for r in delta.select("op").distinct().collect()}
-    unknown = ops - set(VERTEX_MUTATION_OPS)
-    if unknown:
-        raise ValueError(f"unknown vertex mutation ops: {sorted(unknown)}")
+    ops = _op_set(delta, VERTEX_MUTATION_OPS, "vertex mutation ops")
+    return _merge_vertices(base_vertices, delta, ops)
+
+
+def _merge_vertices(base_vertices: DataFrame, delta: DataFrame, ops: set) -> DataFrame:
     vcols = base_vertices.columns
     data_cols = [c for c in vcols if c != "id"]
     missing = [
@@ -144,22 +159,7 @@ def merge_vertices(base_vertices: DataFrame, delta: DataFrame) -> DataFrame:
 
 def _weight_dependent(key: tuple) -> bool:
     """True for cache keys whose layout bakes in edge weights."""
-    if key[0] == "pie":
-        return True
-    return key[0] == "push" and bool(key[2])
-
-
-def _key_undirected(key: tuple) -> bool:
-    """True when a prep-cache key is an UNDIRECTED (doubled) layout —
-    the ones whose del patching needs the survivor recompute."""
-    kind = key[0]
-    if kind == "push":
-        return not key[1]
-    if kind == "gather":
-        return not key[2]
-    if kind == "pie":
-        return not key[3]
-    return False
+    return key[0] in ("adj", "pie")
 
 
 def _doubled(df: DataFrame, directed: bool) -> DataFrame:
@@ -219,119 +219,52 @@ def _touched_pairs(directed, *deltas):
     return _doubled(t, directed).dropDuplicates(["src", "dst"])
 
 
-def _patch_layout(
-    old: DataFrame,
-    merged: DataFrame,
-    kind: str,
-    directed: bool,
-    has_w: bool,
-    vids,
-    dels,
-    touched,
-    part_expr=None,
-    repartition=None,
-    storage_level=None,
+def _patch_adjacency(
+    old: DataFrame, merged: DataFrame, directed: bool, has_w: bool, vids, dels, touched
 ) -> DataFrame:
-    """Generic layout patch: survivors keep their rows (and part), touched
-    pairs are recomputed from the merged table exactly as the full build
-    would — ``kind`` picks the per-pair reduction:
+    """The adjacency patch: survivors keep their rows, touched pairs are
+    recomputed from the merged table by the build's own
+    :func:`~libgrape_lite_spark.plans.kernels.pair_aggregate` (min weight
+    and ``cnt``).
 
-    * ``gather``   — parallel copies kept as-is
-    * ``push_unw`` — distinct non-self-loop pairs
-    * ``pair_min`` — min weight per pair (weighted push / PIE)
-
-    Cost: two narrow scans (survivors over the base layout's pinned
+    Cost: two narrow scans (survivors over the base adjacency's pinned
     blocks, touched copies over the merged table's) + the final
     co-partitioning shuffle; a pure-removal delta (``touched`` None —
     dels with no reverse-stored survivors, delv) skips even that shuffle
     because broadcast anti-joins preserve the base layout's partitioning.
     """
-    survive = _apply_removals(old, directed, vids, dels)
-    if touched is None:
-        out = survive  # removals only — partitioning preserved, no shuffle
-    else:
-        survive = survive.join(F.broadcast(touched), ["src", "dst"], "left_anti")
+    from pyspark.storagelevel import StorageLevel
+
+    out = _apply_removals(old, directed, vids, dels)
+    if touched is not None:
+        survive = out.join(F.broadcast(touched), ["src", "dst"], "left_anti")
         w = (F.col("weight") if has_w else F.lit(1.0)).alias("weight")
         m = merged.select("src", "dst", w).join(
             F.broadcast(touched), ["src", "dst"], "left_semi"
         )
-        md = _doubled(m, directed)
-        if kind == "gather":
-            rec = md.select("src", "dst")
-        elif kind == "push_unw":
-            rec = (
-                md.select("src", "dst")
-                .where(F.col("src") != F.col("dst"))
-                .dropDuplicates(["src", "dst"])
-            )
-        else:  # pair_min
-            rec = md.groupBy("src", "dst").agg(F.min("weight").alias("weight"))
-        if part_expr is not None:
-            rec = rec.withColumn("part", part_expr)
-        out = survive.unionByName(rec)
-        if repartition is not None:
-            out = repartition(out)
-    if storage_level is not None:
-        return out.localCheckpoint(eager=True, storageLevel=storage_level)
-    return out.localCheckpoint(eager=True)
-
-
-def _layout_patch_thunk(key, val, merged, has_w, vids, dels, upds, adds, del_surv):
-    """A lazy patcher for one prep-cache key, or None if unknown. Runs on
-    first use via ``cached_prepared``'s pending hook; falls back to a full
-    rebuild there if it raises (e.g. the base layout was LRU-evicted)."""
-    kind = key[0]
-
-    def _route(directed, *weight_deltas):
-        """(touched, del_rm): dels anti-join away on every layout (both
-        orientations when undirected); on UNDIRECTED layouts the del
-        pairs that still exist in the merged table (reverse-stored
-        survivors, ``del_surv`` — delta-sized, usually empty) are
-        additionally recomputed, keeping the common all-copies-gone del
-        on the zero-shuffle path — see _apply_removals."""
-        if directed or del_surv is None:
-            return _touched_pairs(directed, *weight_deltas), dels
-        return _touched_pairs(directed, *weight_deltas, del_surv), dels
-
-    if kind == "push":
-        directed, weighted = key[1], key[2]
-        # repartition lambdas re-sort by the join key so patched layouts
-        # keep the build-time sort-elision property (plans/kernels.py)
-        if weighted:
-            touched, del_rm = _route(directed, adds, upds)
-            return lambda: _patch_layout(
-                val.select("src", "dst", "weight"), merged, "pair_min", directed,
-                has_w, vids, del_rm, touched,
-                repartition=lambda df: df.repartition("src").sortWithinPartitions("src"),
-            )
-        touched, del_rm = _route(directed, adds)
-        return lambda: _patch_layout(
-            val.select("src", "dst"), merged, "push_unw", directed, has_w,
-            vids, del_rm, touched,
-            repartition=lambda df: df.repartition("src").sortWithinPartitions("src"),
+        # re-sorted by src so the patch keeps the build-time sort-elision
+        # property (plans/kernels.py adjacency_table)
+        out = (
+            survive.unionByName(pair_aggregate(_doubled(m, directed)))
+            .repartition("src")
+            .sortWithinPartitions("src")
         )
-    if kind == "gather":
-        gkey, directed = key[1], key[2]
-        touched, del_rm = _route(directed, adds)
-        from pyspark.storagelevel import StorageLevel
+    return out.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
-        return lambda: _patch_layout(
-            val.select("src", "dst"), merged, "gather", directed, has_w,
-            vids, del_rm, touched,
-            repartition=lambda df: df.repartition(gkey).sortWithinPartitions(gkey),
-            storage_level=StorageLevel.MEMORY_AND_DISK if gkey == "src" else None,
-        )
-    if kind == "pie":
-        nf, bounds, directed = key[1], list(key[2]), key[3]
-        touched, del_rm = _route(directed, adds, upds)
-        return lambda: _patch_layout(
-            val.select("src", "dst", "weight", "part"), merged, "pair_min",
-            directed, has_w, vids, del_rm, touched,
-            part_expr=segment_part_bounds("src", bounds),
-            # keep the build's part-sorted property (cogroup sort elision)
-            repartition=lambda df: df.repartition(nf, "part").sortWithinPartitions("part"),
-        )
-    return None
+
+def _adjacency_patch_thunk(directed, val, merged, has_w, vids, dels, upds, adds, del_surv):
+    """A lazy patcher for the base's adjacency. Runs on first use via
+    ``cached_prepared``'s pending hook; falls back to a full rebuild there
+    if it raises (e.g. the base layout was LRU-evicted).
+
+    Dels anti-join away (both orientations when undirected); on an
+    UNDIRECTED adjacency the del pairs that still exist in the merged
+    table (reverse-stored survivors, ``del_surv`` — delta-sized, usually
+    empty) are additionally recomputed, keeping the common
+    all-copies-gone del on the zero-shuffle path — see _apply_removals."""
+    extra = () if directed or del_surv is None else (del_surv,)
+    touched = _touched_pairs(directed, adds, upds, *extra)
+    return lambda: _patch_adjacency(val, merged, directed, has_w, vids, dels, touched)
 
 
 def merge_edges(
@@ -351,23 +284,24 @@ def merge_edges(
     The merged result is row-identical to rebuilding from the mutated
     edge list (pytest-pinned equivalence, test_round6_ops.py), but the
     derivation is shuffle-free, unaffected prepared layouts carry over,
-    and — with ``patch_layouts`` (default) — affected layouts are patched
-    lazily from the base's pinned layouts instead of rebuilt (see module
+    and — with ``patch_layouts`` (default) — the adjacency is patched
+    lazily from the base's pinned one instead of rebuilt (see module
     docstring; pytest-pinned against full rebuilds in
     test_round7_mutation.py).
     """
-    if "op" not in delta.columns:
-        raise ValueError("delta needs an 'op' column (add|del|upd|delv)")
-    ops = {r["op"] for r in delta.select("op").distinct().collect()}
-    unknown = ops - set(MUTATION_OPS)
-    if unknown:
-        raise ValueError(f"unknown mutation ops: {sorted(unknown)}")
+    ops = _op_set(delta, MUTATION_OPS, "mutation ops")
+    return _merge_edges(base_edges, delta, ops, patch_layouts)
+
+
+def _merge_edges(
+    base_edges: DataFrame, delta: DataFrame, ops: set, patch_layouts: bool
+) -> DataFrame:
     has_w = "weight" in base_edges.columns
     if "upd" in ops and not has_w:
         raise ValueError("weight updates on an unweighted edge table")
 
     # delta sub-frames, pinned once (each is reused by the merged-table
-    # derivation and by up to 7 layout-patch thunks)
+    # derivation and by the adjacency patch thunk)
     vids = dels = upds = adds = None
     if "delv" in ops:
         vids = (
@@ -428,19 +362,14 @@ def merge_edges(
         if d is not None:
             mcache.pinned_ids.update(_pinned_rdd_ids(d))
     del_surv = None
-    if (
-        dels is not None
-        and patch_layouts
-        and base_cache
-        and any(_key_undirected(k) for k in base_cache)
-    ):
+    if dels is not None and patch_layouts and base_cache and ("adj", False) in base_cache:
         # del pairs still PRESENT in the merged table — a del only removes
         # its exact stored orientation, so a reverse-stored copy survives
-        # and undirected layouts must recompute that pair instead of
+        # and the undirected adjacency must recompute that pair instead of
         # anti-joining it away (hypothesis-found, round 7). One narrow
         # broadcast-semi scan of the merged table, delta-sized output;
         # usually empty, keeping the common all-copies-gone del on the
-        # thunks' zero-shuffle anti-join path.
+        # thunk's zero-shuffle anti-join path.
         present = (
             merged.select("src", "dst")
             .join(
@@ -456,25 +385,18 @@ def merge_edges(
             del_surv = _doubled(present, False).dropDuplicates(["src", "dst"])
     if base_cache:
         for key, val in list(base_cache.items()):
-            if key[0] == "outdeg":
-                # weight-invariant: carries on weight-only deltas; on
-                # topology deltas it rebuilds narrow on demand from the
-                # patched gather layout (one aggregate, exchange elided by
-                # co-partitioning), so no patch thunk is needed
-                if not topo_changed:
-                    _prep_put(mcache, key, val, owned=False)
-                    carried.append(key)
-                continue
             if not topo_changed and not _weight_dependent(key):
+                # the degree table and the directed by-dst copy hold no
+                # weight: a weight-only delta carries them as they are
                 _prep_put(mcache, key, val, owned=False)
                 carried.append(key)
-            elif patch_layouts:
-                thunk = _layout_patch_thunk(
-                    key, val, merged, has_w, vids, dels, upds, adds, del_surv
+            elif key[0] == "adj" and patch_layouts:
+                mcache.pending[key] = _adjacency_patch_thunk(
+                    key[1], val, merged, has_w, vids, dels, upds, adds, del_surv
                 )
-                if thunk is not None:
-                    mcache.pending[key] = thunk
-                    patched.append(key)
+                patched.append(key)
+            # every other layout is built from the adjacency: it rebuilds
+            # on first use from the patched one, one narrow pass or shuffle
         if not topo_changed:
             stats = getattr(base_edges, _DEGREE_STATS_ATTR, None)
             if stats is not None:  # degrees are weight-invariant
@@ -517,12 +439,9 @@ def mutate(
     :func:`merge_edges` — all the carry/patch lifecycle documented there
     applies per side.
     """
-    if "op" not in delta.columns:
-        raise ValueError("delta needs an 'op' column")
-    ops = {r["op"] for r in delta.select("op").distinct().collect()}
-    unknown = ops - set(MUTATION_OPS) - set(VERTEX_MUTATION_OPS)
-    if unknown:
-        raise ValueError(f"unknown mutation ops: {sorted(unknown)}")
+    ops = _op_set(
+        delta, tuple(dict.fromkeys(MUTATION_OPS + VERTEX_MUTATION_OPS)), "mutation ops"
+    )
     vertex_ops = ops & set(VERTEX_MUTATION_OPS)  # delv included: both sides
     edge_ops = ops & set(MUTATION_OPS)
     if vertex_ops and "id" not in delta.columns:
@@ -531,9 +450,10 @@ def mutate(
     out_v, out_e = base_vertices, base_edges
     if vertex_ops:
         vcols = [c for c in base_vertices.columns if c in delta.columns and c != "id"]
-        out_v = merge_vertices(
+        out_v = _merge_vertices(
             base_vertices,
             delta.where(F.col("op").isin(*vertex_ops)).select("op", "id", *vcols),
+            vertex_ops,
         )
     if edge_ops:
         parts = []
@@ -567,5 +487,5 @@ def mutate(
         edelta = parts[0]
         for p in parts[1:]:
             edelta = edelta.unionByName(p)
-        out_e = merge_edges(base_edges, edelta, patch_layouts=patch_layouts)
+        out_e = _merge_edges(base_edges, edelta, edge_ops, patch_layouts)
     return out_v, out_e

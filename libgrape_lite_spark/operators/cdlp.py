@@ -13,7 +13,7 @@ Reference (examples/analytical_apps/cdlp/cdlp.h:37-162 + cdlp_utils.h:28-60):
 * vertices with no neighbors keep their current label (cdlp.h:64-65).
 
 Spark plan per round:
-    counts = edges ⋈ labels on dst → groupBy(src, label).count()
+    counts = edges ⋈ labels on dst → groupBy(src, label).sum(cnt)
     top    = max_by over (count desc, label asc)  — expressed as
              groupBy(src).agg(max(struct(cnt, negated-tiebreak...)))
 We use ``F.max(F.struct(cnt, -label))`` instead of a window: a window with
@@ -46,8 +46,8 @@ def cdlp(
 ) -> DataFrame:
     """Returns DataFrame(id: long, label: long).
 
-    Each round joins the labels onto the pinned gather-by-dst adjacency
-    and aggregates in the JVM (count per (voter, label), then the
+    Each round joins the labels onto the adjacency's by-dst view and
+    aggregates in the JVM (count per (voter, label), then the
     max-of-struct pick) — no per-round Python. A per-fragment cogroup
     vote pre-count lost every pair to this path even on the salted
     power-law graph it targeted (BENCH/runs/cdlp_skew_1792261620.json).
@@ -56,8 +56,8 @@ def cdlp(
     PageRank uses (plans/kernels.py::hub_salt_verdict, reading the
     per-graph memoized degree stats — zero extra jobs after the first
     operator on a graph). When engaged, votes are counted two-level, per
-    (voter, label, salt-of-dst) then per (voter, label) — sum of counts
-    is associative, identical result. Verdict at
+    (voter, label, salt-of-dst) then per (voter, label) — sum is
+    associative, identical result. Verdict at
     ``driver.info["cdlp_hub_salts"]``.
     """
     if not (hub_salts == "auto" or isinstance(hub_salts, int)):
@@ -67,6 +67,7 @@ def cdlp(
 
     with static_plans(spark):
         from libgrape_lite_spark.plans.kernels import (
+            adjacency_table,
             cached_degree_stats,
             gather_adjacency_table,
             hub_salt_verdict,
@@ -74,25 +75,19 @@ def cdlp(
 
         if hub_salts == "auto":
             # degree stats come from the shared per-graph memo (one
-            # aggregate per graph, shared with pagerank); the degree input
-            # is layout-invariant, so a plain doubled projection suffices —
-            # no pinned layout is forced just for detection
-            from libgrape_lite_spark.functions.edges import undirected
-
-            e = edges.select("src", "dst")
+            # aggregate per graph, shared with pagerank)
             _, max_deg, sum_deg = cached_degree_stats(
-                edges, vertices, e if directed else undirected(e), directed
+                edges, vertices, adjacency_table(edges, directed), directed
             )
             hub_salts = hub_salt_verdict(
                 spark, max_deg, sum_deg, hub_degree_factor, min_hub_degree
             )
         drv.info["cdlp_hub_salts"] = hub_salts
 
-        # keep parallel edges — multiplicity affects the vote
-        # (cdlp_utils.h:31-33); gather joins on dst each round, so
-        # pre-partition the edge side once — the table is memoized per
-        # edge table and SHARED with pagerank_local (identical layout;
-        # plans/kernels.py gather_adjacency_table)
+        # the pinned adjacency's by-dst view (gather joins on dst each
+        # round), shared with pagerank_local; each (src, dst) row votes
+        # with its ``cnt`` parallel copies — multiplicity affects the
+        # vote (cdlp_utils.h:31-33; plans/kernels.py gather_adjacency_table)
         adj = gather_adjacency_table(edges, "dst", directed)
 
         def superstep(state: DataFrame, step: int):
@@ -101,7 +96,7 @@ def cdlp(
                 # two-level vote count: per (voter, label, salt-of-dst)
                 # partials first, spreading a hub voter's rows over
                 # hub_salts reducers, then the exact per-(voter, label)
-                # sum — count is associative, identical result
+                # sum — sum is associative, identical result
                 counts = (
                     adj.join(state.select(F.col("id").alias("dst"), "label"), "dst")
                     .groupBy(
@@ -109,7 +104,7 @@ def cdlp(
                         "label",
                         F.pmod(F.hash("dst"), F.lit(hub_salts)).alias("_salt"),
                     )
-                    .agg(F.count(F.lit(1)).alias("pc"))
+                    .agg(F.sum("cnt").alias("pc"))
                     .groupBy("id", "label")
                     .agg(F.sum("pc").alias("cnt"))
                 )
@@ -117,7 +112,7 @@ def cdlp(
                 counts = (
                     adj.join(state.select(F.col("id").alias("dst"), "label"), "dst")
                     .groupBy(F.col("src").alias("id"), "label")
-                    .agg(F.count(F.lit(1)).alias("cnt"))
+                    .agg(F.sum("cnt").alias("cnt"))
                 )
             top = counts.groupBy("id").agg(
                 F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")

@@ -15,8 +15,8 @@ Reference pipeline (examples/analytical_apps/lcc/lcc.h:38-247):
 
 Spark plan (non-iterative — joins only, Catalyst/AQE pick the strategies):
 
-    deg      = doubled.groupBy(src).count()                  # with dups
-    nbr      = distinct undirected pairs (set semantics)
+    deg      = adjacency.groupBy(src).sum(cnt)               # with dups
+    nbr      = adjacency where src != dst (set semantics)
     oriented = nbr where (deg(src), src) < (deg(dst), dst)    # lexicographic
     wedges   = oriented ⋈ oriented on mid vertex
     tri      = wedges ⋈ oriented on (lo, hi)                  # closing edge
@@ -34,15 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from libgrape_lite_spark.functions.edges import undirected
 from libgrape_lite_spark.plans.kernels import graph_op
 
 
 @graph_op
 def triangle_counts(
     vertices: DataFrame, edges: DataFrame, impl: str = "intersect",
-    degree_threshold: int | None = None,
-    _doubled: DataFrame | None = None, _deg: DataFrame | None = None,
+    degree_threshold: int | None = None, _deg: DataFrame | None = None,
 ) -> DataFrame:
     """DataFrame(id, tri) — number of triangles containing each vertex
     (set semantics on neighbors, reference stage 2).
@@ -69,19 +67,12 @@ def triangle_counts(
     """
     if impl not in ("intersect", "wedge"):
         raise ValueError(f"impl must be intersect|wedge, got {impl!r}")
-    from libgrape_lite_spark.plans.kernels import cached_degree_table, push_adjacency_table
+    from libgrape_lite_spark.plans.kernels import push_adjacency_table
 
-    doubled = _doubled if _doubled is not None else undirected(edges.select("src", "dst"))
-    # duplicate-counting degree — shared with pagerank's degree pass
-    deg = (
-        _deg
-        if _deg is not None
-        else cached_degree_table(edges, vertices, doubled, directed=False)
-        .select("id", F.col("degree").alias("deg"))
-    )
+    deg = _deg if _deg is not None else _degrees(vertices, edges)
 
-    # distinct non-self-loop pairs — the same pinned table the frontier-push
-    # impls gather over (prep shared across operators on one edge table)
+    # distinct non-self-loop pairs — a view of the graph's pinned
+    # adjacency (prep shared across operators on one edge table)
     nbr = push_adjacency_table(edges, directed=False, weighted=False)
     ranked = (
         nbr.join(deg.select(F.col("id").alias("src"), F.col("deg").alias("sdeg")), "src")
@@ -126,6 +117,17 @@ def triangle_counts(
     return corners.groupBy("id").agg(F.count(F.lit(1)).alias("tri"))
 
 
+def _degrees(vertices: DataFrame, edges: DataFrame) -> DataFrame:
+    """(id, deg): the duplicate-counting degree, computed and pinned once
+    per GRAPH from its adjacency (shared with pagerank's degree pass via
+    the per-edge-table memo)."""
+    from libgrape_lite_spark.plans.kernels import adjacency_table, cached_degree_table
+
+    return cached_degree_table(
+        edges, vertices, adjacency_table(edges), directed=False
+    ).select("id", F.col("degree").alias("deg"))
+
+
 @graph_op
 def lcc(
     vertices: DataFrame, edges: DataFrame, degree_threshold: int | None = None
@@ -138,18 +140,10 @@ def lcc(
     lcc denominator keeps the ORIGINAL degree, so filtered vertices emit
     0.0 exactly like the reference (tricnt stays 0, lcc.h:217-231).
     """
-    from libgrape_lite_spark.plans.kernels import cached_degree_table
-
-    doubled = undirected(edges.select("src", "dst"))
     # deg feeds BOTH the orientation (twice, via triangle_counts) and the
-    # lcc denominator — computed and pinned once per GRAPH (shared with
-    # pagerank's degree pass via the per-edge-table memo)
-    deg = cached_degree_table(edges, vertices, doubled, directed=False).select(
-        "id", F.col("degree").alias("deg")
-    )
-    tri = triangle_counts(
-        vertices, edges, degree_threshold=degree_threshold, _doubled=doubled, _deg=deg
-    )
+    # lcc denominator
+    deg = _degrees(vertices, edges)
+    tri = triangle_counts(vertices, edges, degree_threshold=degree_threshold, _deg=deg)
 
     return (
         vertices.select("id")

@@ -89,12 +89,12 @@ def pagerank(
             gather_adjacency_table,
         )
 
-        # pre-partition by the gather join key once — shared across
-        # pagerank calls on this edge table (fixed-round + convergence
-        # runs build it once); supersteps then shuffle only
-        # vertex-sized data (state join + groupBy combine). Layout +
-        # serialized-storage rationale: plans/kernels.py
-        # gather_adjacency_table.
+        # the graph's pinned adjacency, partitioned by the gather join
+        # key — shared by every operator on this edge table; supersteps
+        # then shuffle only vertex-sized data (state join + groupBy
+        # combine). Each (src, dst) row stands for its ``cnt`` parallel
+        # copies, so a row sends ``r * cnt`` (plans/kernels.py
+        # gather_adjacency_table).
         adj = gather_adjacency_table(edges, "src", directed)
 
         n = vertices.count()
@@ -132,7 +132,7 @@ def pagerank(
                     state.select(F.col("id").alias("src"), "r"), "src"
                 ).select(
                     F.col("dst").alias("id"),
-                    "r",
+                    (F.col("r") * F.col("cnt")).alias("r"),
                     F.pmod(F.hash("src"), F.lit(hub_salts)).alias("_salt"),
                 )
                 gathered = (
@@ -147,7 +147,7 @@ def pagerank(
                         state.select(F.col("id").alias("src"), "r"), "src"
                     )
                     .groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum("r").alias("gathered"))
+                    .agg(F.sum(F.col("r") * F.col("cnt")).alias("gathered"))
                 )
             new_r = (
                 F.when(
@@ -232,15 +232,19 @@ def pagerank_local(
 
     with static_plans(spark):
         from libgrape_lite_spark.plans.kernels import (
+            adjacency_table,
             cached_degree_table,
             gather_adjacency_table,
         )
 
-        # same layout CDLP gathers over — one shared cache entry
+        # the by-dst view CDLP gathers over (a mirror of the adjacency
+        # undirected, one pinned copy directed); each row weighs ``cnt``
         adj = gather_adjacency_table(edges, "dst", directed)
         # parallel edges count (GetLocalOutDegree); memoized per graph —
-        # degree is layout-invariant, so this shares pagerank's entry
-        deg = cached_degree_table(edges, vertices, adj, directed)
+        # one entry shared with pagerank, counted on the src-keyed adjacency
+        deg = cached_degree_table(
+            edges, vertices, adjacency_table(edges, directed), directed
+        )
         d = damping
 
         def superstep(state: DataFrame, step: int):
@@ -252,7 +256,7 @@ def pagerank_local(
             gathered = (
                 adj.join(state.select(F.col("id").alias("dst"), r.alias("r")), "dst")
                 .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("r").alias("g"))
+                .agg(F.sum(F.col("r") * F.col("cnt")).alias("g"))
             )
             x = F.lit(1.0) - d + d * F.coalesce("g", F.lit(0.0))
             new_state = (

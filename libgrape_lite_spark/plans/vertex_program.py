@@ -34,8 +34,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from libgrape_lite_spark.functions.edges import undirected
+from libgrape_lite_spark.plans.kernels import release_pinned
 from libgrape_lite_spark.plans.superstep import IterationDriver
 from libgrape_lite_spark.session import static_plans
+from libgrape_lite_spark.transients import transient_checkpoint
 
 _MERGE = {"min": F.min, "max": F.max, "sum": F.sum, "count": F.count}
 
@@ -103,8 +105,11 @@ def run_vertex_program(
     merge_fn = _MERGE[program.merge]
 
     with static_plans(spark):
+        # the program's own per-edge adjacency (its sum/count merges see
+        # parallel edges as rows), pinned as a transient: the caller's
+        # release_transients() frees it once the result is consumed
         adj = edges if program.directed else undirected(edges)
-        adj = adj.repartition("src").localCheckpoint(eager=True)
+        adj = transient_checkpoint(adj.repartition("src"))
 
         def init() -> DataFrame:
             state = program.init(vertices, edges)
@@ -129,8 +134,11 @@ def run_vertex_program(
             active = observed["active"]
             mut = mutate(step, state)
             if mut is not None:
+                old = adj
                 adj, state = _apply_mutation(program, adj, state, mut)
                 state = drv.materialize(state, step)
+                if adj is not old:
+                    release_pinned(old)  # superseded by the re-pin
                 active = max(active, state.where("changed").count())
             return state, active
 
@@ -191,7 +199,7 @@ def _apply_mutation(
     # re-partition + re-pin the mutated adjacency once (same contract as the
     # initial PrepareToRunApp step)
     if mut.add_edges is not None or mut.remove_edges is not None or mut.remove_vertices is not None:
-        adj = adj.repartition("src").localCheckpoint(eager=True)
+        adj = transient_checkpoint(adj.repartition("src"))
     if mut.add_vertices is not None:
         init_new = program.init(mut.add_vertices.select("id"), adj)
         if "changed" not in init_new.columns:

@@ -9,6 +9,10 @@ Checks (each prints PASS/FAIL and the evidence lines):
 3. Hot-path expressions run inside WholeStageCodegen.
 4. The frontier join in SSSP/WCC broadcasts the (small) frontier side.
 
+and, further down, dedup/knn plan shapes, the mutation patch, and the
+CDLP vote gather over the adjacency's by-dst mirror view (no Exchange on
+the adjacency side of its join).
+
 Writes the audited plans to PLANS.md. Run: python scripts/audit_plans.py
 """
 
@@ -30,6 +34,33 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _join_child_with(tree: str, marker: str) -> str | None:
+    """The subtree (tree-string lines) of the join child that reads the
+    table whose scan output contains ``marker`` directly, with no join in
+    between — None when no such child exists."""
+    lines = tree.splitlines()
+
+    def col(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    for j, head in enumerate(lines):
+        if "Join" not in head:
+            continue
+        child_col, block, blocks = col(head) + 3, [], []
+        for ln in lines[j + 1:]:
+            if col(ln) < child_col:
+                break
+            if col(ln) == child_col and block:
+                blocks.append(block)
+                block = []
+            block.append(ln)
+        blocks.append(block)
+        for b in blocks:
+            if any(marker in ln for ln in b) and not any("Join" in ln for ln in b):
+                return "\n".join(b)
+    return None
 
 
 def main() -> int:
@@ -200,17 +231,18 @@ def main() -> int:
          else "row python or cartesian found"))
     sections.append(("IVF ANN probe (assign/score kernels + top-k)", p9))
 
-    # 10. mutation layout patch, pure-removal path (merge_edges delv/del
+    # 10. mutation adjacency patch, pure-removal path (merge_edges delv/del
     # with no reverse-stored survivors): broadcast anti-joins over the
-    # pinned layout must preserve its partitioning — ZERO shuffle
+    # pinned adjacency must preserve its partitioning — ZERO shuffle
     # Exchanges in the patch plan (the BENCH/BASELINE.md zero-shuffle
     # claim, machine-checked; BroadcastExchange of the delta-sized
     # removal sets is expected and not counted)
     from libgrape_lite_spark.mutation import _apply_removals
+    from libgrape_lite_spark.plans.kernels import adjacency_table
 
     with static_plans(spark):
         vids = spark.createDataFrame([(7,)], "vid long").localCheckpoint(eager=True)
-        patched = _apply_removals(adj_p.select("src", "dst", "part"), False, vids, None)
+        patched = _apply_removals(adjacency_table(edges), False, vids, None)
         p10 = plan_of(patched)
     phys10 = p10.split("== Physical Plan ==")[1]
     n_ex10 = len(re.findall(r"\(\d+\) Exchange", phys10))
@@ -220,7 +252,41 @@ def main() -> int:
          "Exchanges — pinned layout partitioning preserved",
          ok10, f"shuffle exchanges={n_ex10}, "
          f"anti-join={'broadcast' if 'BroadcastHashJoin' in phys10 else 'MISSING'}"))
-    sections.append(("Mutation layout patch, pure-removal path (delv anti-joins)", p10))
+    sections.append(("Mutation adjacency patch, pure-removal path (delv anti-joins)", p10))
+
+    # 11. CDLP superstep over the pinned adjacency's by-dst MIRROR view
+    # (dst AS src, src AS dst): the adjacency's src hash partitioning and
+    # ordering map through the aliases, so the join on dst must find the
+    # adjacency side already clustered — no Exchange between its scan and
+    # the join; only the label side and the two vote aggregates shuffle
+    from libgrape_lite_spark.plans.kernels import gather_adjacency_table, invalidate_prepared
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with static_plans(spark):
+        mirror = gather_adjacency_table(edges, "dst", False)
+        labels = vertices.select("id", F.col("id").alias("label"))
+        counts = (
+            mirror.join(labels.select(F.col("id").alias("dst"), "label"), "dst")
+            .groupBy(F.col("src").alias("id"), "label")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+        top = counts.groupBy("id").agg(
+            F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
+        ).select("id", (-F.col("m.neg")).alias("new_label"))
+        step11 = labels.join(top, "id", "left")
+        p11 = plan_of(step11)
+        tree11 = step11._jdf.queryExecution().executedPlan().toString()
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    adj_side = _join_child_with(tree11, "cnt#")
+    n_ex11 = len(re.findall(r"\(\d+\) Exchange", p11.split("== Physical Plan ==")[1]))
+    ok11 = adj_side is not None and "Exchange" not in adj_side
+    results.append(
+        ("cdlp superstep: vote gather over the by-dst mirror view, no Exchange on "
+         "the adjacency side of its join",
+         ok11, f"adjacency side={'not found' if adj_side is None else 'exchange-free' if ok11 else 'RE-SHUFFLED'}, "
+         f"exchanges in superstep={n_ex11}"))
+    sections.append(("CDLP superstep over the adjacency's by-dst mirror view", p11))
+    invalidate_prepared(edges)
 
     ok = True
     lines = ["# PLANS — audited physical plans (scripts/audit_plans.py)\n"]

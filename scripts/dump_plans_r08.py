@@ -14,7 +14,6 @@ Writes <out_dir>/<name>_<suffix>.txt for:
   - pie_superstep        (wcc/sssp auto and bfs local-fixpoint cogroup)
   - sssp_superstep       (frontier relax)
   - lcc_plan             (triangle intersect pipeline)
-  - mutation_patch       (pure-removal layout patch)
 
 Run on the round-start commit for the *_before.txt files and on the final
 tree for *_after.txt.
@@ -62,12 +61,9 @@ def main() -> None:
     plans["transcripts_turns"] = plan_of(entry._q_transcripts(spark, SF))
 
     t = events_to_transcripts(spark, SF)
-    from libgrape_lite_spark.functions import edges as edges_mod
+    from libgrape_lite_spark.functions.edges import _with_prev
 
-    if hasattr(edges_mod, "_with_prev"):
-        plans["graph_build_derive"] = plan_of(edges_mod._with_prev(t))
-    else:
-        plans["graph_build_derive"] = plan_of(edges_mod.derive_edges(t))
+    plans["graph_build_derive"] = plan_of(_with_prev(t))
 
     from libgrape_lite_spark.functions.ids import encode_vertices
 
@@ -113,7 +109,7 @@ def main() -> None:
         gathered = (
             gsrc.join(state.select(F.col("id").alias("src"), "r"), "src")
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("r").alias("gathered"))
+            .agg(F.sum(F.col("r") * F.col("cnt")).alias("gathered"))
         )
         new_state = (
             state.select("id", "degree")
@@ -130,7 +126,7 @@ def main() -> None:
         pl_gather = (
             gdst.join(state.select(F.col("id").alias("dst"), "r"), "dst")
             .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("r").alias("g"))
+            .agg(F.sum(F.col("r") * F.col("cnt")).alias("g"))
         )
         plans["pagerank_local_superstep"] = plan_of(
             state.select("id", "degree").join(pl_gather, "id", "left")
@@ -140,7 +136,7 @@ def main() -> None:
         counts = (
             gdst.join(lab.select(F.col("id").alias("dst"), "label"), "dst")
             .groupBy(F.col("src").alias("id"), "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
+            .agg(F.sum("cnt").alias("cnt"))
         )
         top = counts.groupBy("id").agg(
             F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m")
@@ -183,16 +179,6 @@ def main() -> None:
     from libgrape_lite_spark.operators import lcc
 
     plans["lcc_plan"] = plan_of(lcc(vertices, edges))
-
-    from libgrape_lite_spark.mutation import _apply_removals
-
-    with static_plans(spark):
-        vids = spark.createDataFrame([(7,)], "vid long").localCheckpoint(eager=True)
-        plans["mutation_patch"] = plan_of(
-            _apply_removals(
-                pie.select("src", "dst", "weight", "part"), False, vids, None
-            )
-        )
 
     for name, text in plans.items():
         (out_dir / f"{name}_{suffix}.txt").write_text(text)

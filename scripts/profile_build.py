@@ -76,11 +76,10 @@ def one_pass(spark, tag):
     clock("counts", lambda: (vertices.count(), edges.count()))
 
     from libgrape_lite_spark.plans.kernels import (
+        adjacency_table,
         cached_degree_table,
         cached_edge_balanced_bounds,
-        gather_adjacency_table,
         pie_fragment_table,
-        push_adjacency_table,
     )
     from libgrape_lite_spark.session import tune_shuffle_partitions
 
@@ -89,18 +88,12 @@ def one_pass(spark, tag):
 
     spark.sparkContext.setJobDescription(f"{tag}: bounds")
     bounds = clock("bounds", lambda: cached_edge_balanced_bounds(edges, nf, key="src"))
+    spark.sparkContext.setJobDescription(f"{tag}: adjacency")
+    adj = clock("adjacency", lambda: adjacency_table(edges, directed=False))
     spark.sparkContext.setJobDescription(f"{tag}: pie table")
     clock("pie", lambda: pie_fragment_table(edges, nf, bounds, directed=False))
-    spark.sparkContext.setJobDescription(f"{tag}: push unweighted")
-    clock("push_unw", lambda: push_adjacency_table(edges, directed=False, weighted=False))
-    spark.sparkContext.setJobDescription(f"{tag}: push weighted")
-    clock("push_w", lambda: push_adjacency_table(edges, directed=False, weighted=True))
-    spark.sparkContext.setJobDescription(f"{tag}: gather src")
-    gsrc = clock("gather_src", lambda: gather_adjacency_table(edges, "src", False))
-    spark.sparkContext.setJobDescription(f"{tag}: gather dst")
-    clock("gather_dst", lambda: gather_adjacency_table(edges, "dst", False))
     spark.sparkContext.setJobDescription(f"{tag}: degree")
-    clock("degree", lambda: cached_degree_table(edges, vertices, gsrc, False))
+    clock("degree", lambda: cached_degree_table(edges, vertices, adj, False))
     spark.sparkContext.setJobDescription(None)
 
     t["total"] = round(sum(v for k, v in t.items() if k != "total"), 3)

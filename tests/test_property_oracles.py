@@ -72,6 +72,49 @@ def test_cdlp_matches_oracle(spark, edges, rounds):
     assert got == _cdlp_oracle(N_VERTICES, edges, rounds)
 
 
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=edge_lists, directed=st.booleans())
+def test_prepared_layouts_match_per_edge_definitions(spark, edges, directed):
+    """prepare_graph pins one pair-aggregated adjacency; every layout it
+    returns must equal the per-edge definition it replaces: the
+    ``cnt``-expanded gathers are the doubled multiset (the by-dst mirror
+    included), push is its distinct non-self-loop pairs, the weighted
+    push and PIE hold each pair's min weight, and the degree table
+    counts rows."""
+    from libgrape_lite_spark.plans.kernels import invalidate_prepared, prepare_graph
+
+    weights = [float(1 + i % 3) for i in range(len(edges))]
+    v = make_vertices(spark, range(N_VERTICES))
+    e = make_edges(spark, edges, weights)
+    layouts = prepare_graph(v, e, num_fragments=3, directed=directed)
+
+    rows = [(s, d, w) for (s, d), w in zip(edges, weights)]
+    if not directed:
+        rows += [(d, s, w) for s, d, w in rows]
+    multiset = Counter((s, d) for s, d, _w in rows)
+    min_w: dict = {}
+    for s, d, w in rows:
+        min_w[(s, d)] = min(w, min_w.get((s, d), w))
+
+    for name in ("gather_src", "gather_dst"):
+        got = [(r["src"], r["dst"], r["cnt"]) for r in layouts[name].collect()]
+        assert len({(s, d) for s, d, _c in got}) == len(got)  # one row per pair
+        assert Counter({(s, d): c for s, d, c in got}) == multiset
+    assert sorted(tuple(r) for r in layouts["push"].collect()) == sorted(
+        p for p in multiset if p[0] != p[1]
+    )
+    for name in ("push_weighted", "pie"):
+        got = {(r["src"], r["dst"]): r["weight"] for r in layouts[name].collect()}
+        assert got == min_w
+    degree = Counter()
+    for s, _d, _w in rows:
+        degree[s] += 1
+    assert {r["id"]: r["degree"] for r in layouts["degree"].collect()} == {
+        i: degree[i] for i in range(N_VERTICES)
+    }
+    invalidate_prepared(e)
+
+
 @pytest.mark.parametrize("impl", ["auto", "twostar"])
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(edges=edge_lists)
@@ -321,21 +364,23 @@ def test_merge_edges_matches_rebuild_and_oracle(spark, base, delta, directed):
     disagree with a full rebuild, whatever the delta shape (including
     deltas that empty the graph)."""
     from libgrape_lite_spark.mutation import merge_edges
+    from libgrape_lite_spark.plans import kernels
     from libgrape_lite_spark.plans.kernels import (
         gather_adjacency_table,
         invalidate_prepared,
         push_adjacency_table,
     )
 
+    fallbacks = kernels._PATCH_FALLBACKS
     # one row per (op, src, dst): duplicate upds on a pair would make the
     # winner arbitrary in both engine and oracle
     delta = list({(op, s, d): (op, s, d, w) for op, s, d, w in delta}.values())
     e = make_edges(spark, base)
-    # warm exactly the two layouts compared below (the builders memoize on
-    # e, so merge_edges registers patch thunks for them; prepare_graph's
-    # full 6-layout warm made each example ~5x slower for no extra signal)
+    # warm only the adjacency (merge_edges registers its patch thunk;
+    # both layouts compared below are views of it, the weighted push with
+    # ``cnt``; prepare_graph's full warm made each example ~5x slower for
+    # no extra signal)
     push_adjacency_table(e, directed=directed, weighted=True)
-    gather_adjacency_table(e, "src", directed)
     merged = merge_edges(
         e, spark.createDataFrame(delta, "op string, src long, dst long, weight double")
     )
@@ -350,6 +395,7 @@ def test_merge_edges_matches_rebuild_and_oracle(spark, base, delta, directed):
         got = sorted(tuple(r) for r in build(merged).collect())
         ref = sorted(tuple(r) for r in build(fresh).collect())
         assert got == ref
+    assert kernels._PATCH_FALLBACKS == fallbacks  # the patch ran, no rebuild
     for t in (e, merged, fresh):
         invalidate_prepared(t)
 
@@ -400,10 +446,13 @@ def test_mutate_matches_oracle(spark, base, vops, eops, directed):
     from pyspark.sql import functions as F
 
     from libgrape_lite_spark.mutation import mutate
+    from libgrape_lite_spark.plans import kernels
     from libgrape_lite_spark.plans.kernels import (
         invalidate_prepared,
         push_adjacency_table,
     )
+
+    fallbacks = kernels._PATCH_FALLBACKS
 
     # canonicalize: one addv-or-updv per id (merge_vertices dedups the
     # combined upsert set by id, so a mixed addv+updv on one id would
@@ -446,6 +495,7 @@ def test_mutate_matches_oracle(spark, base, vops, eops, directed):
         assert sorted(tuple(r) for r in patched.collect()) == sorted(
             tuple(r) for r in rebuilt.collect()
         )
+        assert kernels._PATCH_FALLBACKS == fallbacks
         invalidate_prepared(fresh)
         invalidate_prepared(e2)
     invalidate_prepared(e)

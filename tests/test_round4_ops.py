@@ -92,7 +92,7 @@ def test_prepared_tables_shared_across_operators(spark):
     assert r_pr == r_pr2  # cached adjacency + degree table reused bit-stably
     cache = getattr(e, _PREP_CACHE_ATTR)
     assert any(k[0] == "pie" for k in cache)      # wcc/bfs/sssp share this
-    assert ("gather", "src", False) in cache
+    assert ("adj", False) in cache               # pagerank's gather is its view
     assert ("outdeg", False) in cache
 
     # fresh objects (no cache) must agree exactly

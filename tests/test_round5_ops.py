@@ -53,6 +53,8 @@ def test_prepared_cache_bounded_after_full_session(spark):
 
     cache = getattr(e, _PREP_CACHE_ATTR)
     assert len(cache) <= PREP_CACHE_CAP
+    # one adjacency serves every app: the rest are its views
+    assert {k[0] for k in cache} == {"adj", "pie", "outdeg"}
 
 
 def test_prepared_cache_lru_evicts_and_unpersists(spark):
@@ -296,6 +298,14 @@ def test_prepare_graph_warms_every_operator_layout(spark):
         "pie", "push", "push_weighted", "gather_src", "gather_dst", "degree",
     }
     cache = getattr(e, _PREP_CACHE_ATTR)
+    # pinned: the adjacency, the PIE table and the degree table only
+    assert {k[0] for k in cache} == {"adj", "pie", "outdeg"} and len(cache) == 3
+    ed = make_edges(spark, [(1, 2), (2, 3)])
+    prepare_graph(v, ed, directed=True)
+    # a directed graph adds its by-dst copy
+    assert {k[0] for k in getattr(ed, _PREP_CACHE_ATTR)} == {
+        "adj", "pie", "outdeg", "by_dst",
+    }
     before = {k: id(val[1] if isinstance(val, tuple) else val) for k, val in cache.items()}
 
     r_wcc = as_dict(wcc(v, e))

@@ -238,9 +238,9 @@ def test_merge_edges_matches_full_rebuild(spark):
 
 
 def test_merge_edges_weight_only_delta_carries_topology_layouts(spark):
-    """A weight-only delta must carry every topology-derived prepared
-    layout from the base (zero rebuild cost) while weighted layouts (PIE,
-    weighted push) rebuild; operators over the merged table stay exact."""
+    """A weight-only delta must carry every weight-free prepared layout
+    from the base (zero rebuild cost) while the weighted ones (adjacency,
+    PIE) patch or rebuild; operators over the merged table stay exact."""
     from tests.conftest import make_edges, make_vertices
     from libgrape_lite_spark.mutation import merge_edges
     from libgrape_lite_spark.operators import sssp, wcc
@@ -262,10 +262,8 @@ def test_merge_edges_weight_only_delta_carries_topology_layouts(spark):
     carried = set(merged._lgls_carried_layouts)
     assert carried, "weight-only delta should carry layouts"
     assert carried == set(mcache.borrowed)
-    kinds = {k[0] for k in carried}
-    assert {"gather", "push", "outdeg"} <= kinds
-    assert all(k[0] != "pie" for k in carried)
-    assert all(not (k[0] == "push" and k[2]) for k in carried)
+    assert carried == {("outdeg", False)}
+    assert set(merged._lgls_pending_patches) == {("adj", False)}
 
     rebuilt = make_edges(spark, [(1, 2, 1.0), (2, 3, 0.5), (3, 4, 1.0), (2, 5, 4.0)])
     assert _rows(merged) == _rows(rebuilt)

@@ -4,12 +4,13 @@
 The reference's ``MutableEdgecutFragment::Mutate``
 (mutable_edgecut_fragment.h:191-260) patches only the CSR segments a
 delta touches. The Spark analog (mutation.py): ``merge_edges`` registers
-a PENDING patch thunk per prepared layout that derives the new layout
-from the base's pinned layout — broadcast anti-joins for removals, a
-delta-sized touched-pair recompute from the merged table for
-additions/updates — instead of a full O(E) rebuild. Every test here pins
-patched layouts row-identical to a from-scratch build on an equivalent
-fresh edge table.
+a PENDING patch thunk for the graph's one adjacency that derives it from
+the base's pinned adjacency — broadcast anti-joins for removals, a
+delta-sized touched-pair recompute (min weight, ``cnt``) from the merged
+table for additions/updates — instead of a full O(E) rebuild; the other
+layouts rebuild from the patched adjacency. Every test here pins patched
+layouts row-identical to a from-scratch build on an equivalent fresh
+edge table.
 """
 
 from __future__ import annotations
@@ -76,9 +77,11 @@ def _mutated_graph(spark, directed):
 
 @pytest.mark.parametrize("directed", [False, True])
 def test_patched_layouts_match_full_rebuild(spark, directed):
-    """Every pending-patched layout must be row-identical (multiset — the
-    gather layouts keep parallel copies) to the same builder run from
-    scratch on a fresh table with the merged rows."""
+    """The patched adjacency and every layout derived from it must be
+    row-identical (``cnt`` included) to the same builder run from scratch
+    on a fresh table with the merged rows, with no patch falling back to
+    a rebuild."""
+    from libgrape_lite_spark.plans import kernels
     from libgrape_lite_spark.plans.kernels import (
         _PREP_CACHE_ATTR,
         gather_adjacency_table,
@@ -86,14 +89,13 @@ def test_patched_layouts_match_full_rebuild(spark, directed):
         push_adjacency_table,
     )
 
+    fallbacks = kernels._PATCH_FALLBACKS
     v, base, merged = _mutated_graph(spark, directed)
-    pending = set(merged._lgls_pending_patches)
-    kinds = {k[0] for k in pending}
-    assert {"push", "gather", "pie"} <= kinds
+    assert set(merged._lgls_pending_patches) == {("adj", directed)}
     assert merged._lgls_carried_layouts == ()
 
     fresh = _fresh_copy(spark, merged)
-    pie_key = next(k for k in pending if k[0] == "pie")
+    pie_key = next(k for k in getattr(base, _PREP_CACHE_ATTR) if k[0] == "pie")
     nf, bounds = pie_key[1], list(pie_key[2])
 
     comparisons = [
@@ -123,6 +125,7 @@ def test_patched_layouts_match_full_rebuild(spark, directed):
         # (the r7 delv column-swap bug) while by-name rows still agree
         assert patched.columns == rebuilt.columns
         assert _rows(patched) == _rows(rebuilt)
+    assert kernels._PATCH_FALLBACKS == fallbacks
 
     # consumed patches became OWNED cache entries (fresh checkpoints, not
     # borrowed from the base)
@@ -259,6 +262,7 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
     coincidences that hid the bug)."""
     from libgrape_lite_spark.mutation import merge_edges
     from libgrape_lite_spark.plans.kernels import (
+        _PREP_CACHE_ATTR,
         gather_adjacency_table,
         invalidate_prepared,
         pie_fragment_table,
@@ -276,7 +280,7 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
     merged = merge_edges(base, delta)
     assert merged._lgls_pending_patches
     fresh = _fresh_copy(spark, merged)
-    pie_key = next(k for k in merged._lgls_pending_patches if k[0] == "pie")
+    pie_key = next(k for k in getattr(base, _PREP_CACHE_ATTR) if k[0] == "pie")
     nf, bounds = pie_key[1], list(pie_key[2])
     for build in (
         lambda t: push_adjacency_table(t, directed=True, weighted=False),
@@ -296,8 +300,8 @@ def test_delv_only_directed_patch_preserves_column_order(spark, delta_rows):
 
 
 def test_weight_only_delta_patches_weighted_layouts(spark):
-    """r6 carried topology layouts across weight-only deltas but rebuilt
-    PIE + weighted push from scratch; r7 patches them too."""
+    """A weight-only delta patches the adjacency, rebuilds PIE from the
+    patched adjacency and carries the weight-free degree table."""
     from tests.conftest import make_edges, make_vertices
     from libgrape_lite_spark.mutation import merge_edges
     from libgrape_lite_spark.operators import sssp
@@ -311,11 +315,8 @@ def test_weight_only_delta_patches_weighted_layouts(spark):
         "op string, src long, dst long, weight double",
     )
     merged = merge_edges(base, delta)
-    pend_kinds = {k[0] for k in merged._lgls_pending_patches}
-    assert "pie" in pend_kinds
-    assert ("push", False, True) in set(merged._lgls_pending_patches)
-    carried_kinds = {k[0] for k in merged._lgls_carried_layouts}
-    assert {"push", "gather"} <= carried_kinds  # topology layouts still carry
+    assert set(merged._lgls_pending_patches) == {("adj", False)}
+    assert set(merged._lgls_carried_layouts) == {("outdeg", False)}
 
     fresh = _fresh_copy(spark, merged)
     assert _rows(sssp(v, merged, source=1)) == _rows(sssp(v, fresh, source=1))

@@ -161,3 +161,36 @@ def test_mutation_remove_vertex_reactivates_neighbors(spark):
     assert fired["done"], "mutation never fired"
     # vertex 2 gone; vertex 4's in-degree must have been RECOMPUTED to 1
     assert got == {1: 0, 4: 1}
+
+
+def test_vertex_program_releases_its_adjacency_pins(spark):
+    """run_vertex_program pins its adjacency as a transient, and a re-pin
+    after an edge mutation releases the pin it supersedes: repeated calls,
+    each followed by release_transients(), leave the persistent-RDD count
+    where it was."""
+    from libgrape_lite_spark.plans.vertex_program import (
+        Mutation,
+        run_vertex_program,
+        wcc_program,
+    )
+    from libgrape_lite_spark.transients import release_transients
+
+    v = make_vertices(spark, range(12))
+    e = make_edges(
+        spark, [(i, i + 1) for i in range(5)] + [(7, 8), (8, 9), (10, 11)]
+    )
+    bridge = spark.createDataFrame([(5, 7, 1.0)], "src long, dst long, weight double")
+
+    def mutate(step, state):
+        return Mutation(add_edges=bridge) if step == 1 else None
+
+    jsc = spark.sparkContext._jsc
+    counts = []
+    for call in range(4):
+        out = run_vertex_program(
+            v, e, wcc_program(), mutate=mutate if call % 2 else None
+        )
+        out.collect()
+        release_transients()
+        counts.append(jsc.getPersistentRDDs().size())
+    assert len(set(counts)) == 1, counts
