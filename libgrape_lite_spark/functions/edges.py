@@ -110,7 +110,7 @@ def derive_edges(transcripts: DataFrame) -> DataFrame:
     """
     from libgrape_lite_spark import transients
 
-    wp = transients.register(_with_prev(transcripts).localCheckpoint(eager=True))
+    wp = transients.register(transients.pin(_with_prev(transcripts)))
     return _edges_from_prev(wp)
 
 
@@ -130,13 +130,13 @@ def build_graph_from_transcripts(
     # ONE windowed pass over the transcripts serves the edge derivation
     # AND the turns-as-vertices projection (r8, guide §2.4 — previously
     # the turns branch re-ran the row_number window over the events scan)
-    wp = transients.register(_with_prev(transcripts).localCheckpoint(eager=True))
+    wp = transients.register(transients.pin(_with_prev(transcripts)))
     # materialize the derived edges once — they feed both the vertex
     # dictionary (endpoints union) and the id-translation join; without
     # this the 3-branch derivation recomputes per consumer. Registered as
     # a transient (callers checkpoint the returned tables before any
     # release point — bench, _graph, scripts all do)
-    e_oid = transients.register(_edges_from_prev(wp).localCheckpoint(eager=True))
+    e_oid = transients.register(transients.pin(_edges_from_prev(wp)))
     endpoints = e_oid.select(F.col("src_oid").alias("oid")).unionByName(
         e_oid.select(F.col("dst_oid").alias("oid"))
     )
@@ -147,7 +147,7 @@ def build_graph_from_transcripts(
     # callers checkpoint the returned vertices again — without this the
     # id-assignment pipeline re-ran up to 4x per build (r8, guide §2.4)
     vertices = transients.register(
-        encode_vertices(endpoints.unionByName(turns)).localCheckpoint(eager=True)
+        transients.pin(encode_vertices(endpoints.unionByName(turns)))
     )
     edges = encode_edges(e_oid, vertices, broadcast_dict=broadcast_dict)
     return vertices, edges

@@ -15,7 +15,7 @@ distributed order-preserving zip-with-index:
 1. ``repartitionByRange('oid')`` + ``sortWithinPartitions`` (range shuffle,
    fully parallel — same machinery as a distributed sort),
 2. collect only the tiny per-partition row counts,
-3. broadcast-join the cumulative offsets and assign
+3. look the cumulative offsets up in a literal array and assign
    ``id = offset[partition] + position-in-partition`` — the position is
    decoded from ``monotonically_increasing_id()`` (consecutive per
    partition), so the assignment pass is a narrow projection over the
@@ -49,16 +49,20 @@ def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataF
     ``monotonically_increasing_id()`` — partition id in the upper bits,
     consecutive 0-based row count in the lower 33 (the documented layout,
     stable Spark 1.6→4.x) — evaluated directly over the cached sorted
-    partitions, plus a broadcast join against the tiny per-partition
-    offset table. Two r8 steps (guide §4.1 then §2.4, measured in
-    OPTIMIZATION_r08.md): first the r1-r7 ``mapInPandas`` assignment
-    became a JVM window over the range-partition id (identical ids, no
-    first-job Python-pool spin-up, no O(V) JVM→Python→JVM round trip);
+    partitions, plus the per-partition offset read from a literal array
+    indexed by the partition id — no join, no broadcast, and no Python
+    RDD (a ``createDataFrame`` offset table cost a broadcast job whose
+    tasks spent 756 ms of run time for 17 ms of CPU in a warm build, and
+    started the Python workers in a cold session). Two r8 steps (guide
+    §4.1 then §2.4, measured in OPTIMIZATION_r08.md): first the r1-r7
+    ``mapInPandas`` assignment became a JVM window over the
+    range-partition id (identical ids, no first-job Python-pool spin-up,
+    no O(V) JVM→Python→JVM round trip);
     then the window's own ``Exchange hashpartitioning(pid) + Sort(pid,
     oid)`` over all V rows — paid only to re-establish an order the
     cached partitions already have — was elided by reading the position
-    out of the row id (plan: assignment pass = scan + project +
-    broadcast join, 0 exchanges, 0 sorts).
+    out of the row id (plan: assignment pass = scan + project, 0
+    exchanges, 0 sorts, 0 joins).
 
     Raises ``ValueError`` when a partition holds :data:`MAX_PARTITION_ROWS`
     or more oids — past that the row-id layout cannot encode the position.
@@ -90,12 +94,13 @@ def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataF
                 f"at or past the {MAX_PARTITION_ROWS}-row limit of the row-id "
                 f"layout; pass a larger num_partitions (now {n})"
             )
-    offsets: list[tuple[int, int]] = []
+    offsets: list[int] = []
     acc = 0
     for pid in range(max(count_by_pid, default=-1) + 1):
-        offsets.append((pid, acc))
+        offsets.append(acc)
         acc += count_by_pid.get(pid, 0)
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "pid int, off long")
+    # off[pid] as a literal array lookup (element_at is 1-based)
+    off_by_pid = F.array(*[F.lit(o).cast("long") for o in offsets or [0]])
 
     # monotonically_increasing_id = (partition_id << 33) | row-count-in-
     # partition; the cache scan yields each partition in its sorted order,
@@ -103,14 +108,13 @@ def encode_vertices(oids: DataFrame, num_partitions: int | None = None) -> DataF
     # partition — the exact value the previous row_number window computed,
     # without that window's Exchange(pid) + Sort(pid, oid) over all V rows
     mid = F.monotonically_increasing_id()
-    out = (
-        sorted_oids.select("oid", mid.alias("_mid"))
-        .withColumn("pid", F.shiftright("_mid", 33).cast("int"))
-        .join(F.broadcast(off_df), "pid")
-        .select(
-            (F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1)) + F.col("off")).alias("id"),
-            "oid",
-        )
+    pid = F.shiftright("_mid", 33).cast("int")
+    out = sorted_oids.select("oid", mid.alias("_mid")).select(
+        (
+            F.col("_mid").bitwiseAND(F.lit((1 << 33) - 1))
+            + F.element_at(off_by_pid, pid + 1)
+        ).alias("id"),
+        "oid",
     )
     return out
 

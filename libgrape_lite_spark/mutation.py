@@ -43,6 +43,12 @@ shuffle. :func:`merge_edges` closes the gap in two tiers:
   dangling-mass scalar — semantics); they recompute lazily with one
   aggregate over the PATCHED adjacency, which is narrow.
 
+Storage: every table this module materializes — the vertex upserts, the
+merged vertex and edge tables, the delta sub-frames, the ``present`` set
+and the patched adjacency — is pinned serialized through
+:func:`libgrape_lite_spark.transients.pin`, like every other engine
+table.
+
 Ownership: carried layouts stay owned by the base table's cache
 (``_PrepCache.borrowed``); PATCHED layouts are fresh checkpoints owned by
 the merged table's cache. Either way the merged table holds a strong
@@ -64,6 +70,7 @@ from libgrape_lite_spark.plans.kernels import (
     _prep_put,
     pair_aggregate,
 )
+from libgrape_lite_spark.transients import pin
 
 #: ops understood by merge_edges, mirroring the reference Mutation fields:
 #: add → edges_to_add, del → edges_to_remove, upd → edges_to_update,
@@ -93,7 +100,7 @@ def _op_set(delta: DataFrame, allowed: tuple, what: str) -> set:
 
 def merge_vertices(base_vertices: DataFrame, delta: DataFrame) -> DataFrame:
     """Apply a vertex delta to a vertex table; returns the merged table
-    (pinned via eager localCheckpoint).
+    (pinned via :func:`~libgrape_lite_spark.transients.pin`).
 
     ``delta`` columns: ``op`` ∈ {addv, updv, delv}, ``id``, plus the base
     table's vdata columns (required for addv/updv when the base carries
@@ -128,11 +135,10 @@ def _merge_vertices(base_vertices: DataFrame, delta: DataFrame, ops: set) -> Dat
         out = out.join(F.broadcast(rm), "id", "left_anti")
     upserts = None
     if ops & {"addv", "updv"}:
-        upserts = (
+        upserts = pin(
             delta.where(F.col("op").isin("addv", "updv"))
             .select("op", "id", *data_cols)
             .dropDuplicates(["id"])
-            .localCheckpoint(eager=True)
         )
         if data_cols:
             # replace vdata for matched ids (addv and updv alike)
@@ -150,7 +156,7 @@ def _merge_vertices(base_vertices: DataFrame, delta: DataFrame, ops: set) -> Dat
         existing = out.select("id").join(F.broadcast(addv.select("id")), "id", "left_semi")
         new_rows = addv.join(F.broadcast(existing), "id", "left_anti")
         out = out.unionByName(new_rows)
-    merged = out.localCheckpoint(eager=True)
+    merged = pin(out)
     if upserts is not None:
         # tie the upsert checkpoint's blocks to the merged table's lifecycle
         _prep_cache(merged).pinned_ids.update(_pinned_rdd_ids(upserts))
@@ -233,8 +239,6 @@ def _patch_adjacency(
     dels with no reverse-stored survivors, delv) skips even that shuffle
     because broadcast anti-joins preserve the base layout's partitioning.
     """
-    from pyspark.storagelevel import StorageLevel
-
     out = _apply_removals(old, directed, vids, dels)
     if touched is not None:
         survive = out.join(F.broadcast(touched), ["src", "dst"], "left_anti")
@@ -249,7 +253,7 @@ def _patch_adjacency(
             .repartition("src")
             .sortWithinPartitions("src")
         )
-    return out.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    return pin(out)
 
 
 def _adjacency_patch_thunk(directed, val, merged, has_w, vids, dels, upds, adds, del_surv):
@@ -271,7 +275,8 @@ def merge_edges(
     base_edges: DataFrame, delta: DataFrame, patch_layouts: bool = True
 ) -> DataFrame:
     """Apply an edge delta to a normalized edge table; returns the merged
-    table (pinned via eager localCheckpoint, like a freshly loaded graph).
+    table (pinned via :func:`~libgrape_lite_spark.transients.pin`, like a
+    freshly loaded graph).
 
     ``delta`` columns: ``op`` ∈ {add, del, upd, delv}, ``src``, ``dst``,
     ``weight`` (required for add/upd when the base is weighted). ``del``
@@ -304,34 +309,27 @@ def _merge_edges(
     # derivation and by the adjacency patch thunk)
     vids = dels = upds = adds = None
     if "delv" in ops:
-        vids = (
+        vids = pin(
             delta.where(F.col("op") == "delv")
             .select(F.col("src").alias("vid"))
             .dropDuplicates()
-            .localCheckpoint(eager=True)
         )
     if "del" in ops:
-        dels = (
-            delta.where(F.col("op") == "del")
-            .select("src", "dst")
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
+        dels = pin(
+            delta.where(F.col("op") == "del").select("src", "dst").dropDuplicates()
         )
     if "upd" in ops:
-        upds = (
+        upds = pin(
             delta.where(F.col("op") == "upd")
             .select("src", "dst", F.col("weight").alias("_nw"))
             .dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
         )
     if "add" in ops:
         a = delta.where(F.col("op") == "add")
         w = (F.col("weight") if "weight" in delta.columns else F.lit(1.0)).alias(
             "weight"
         )
-        adds = (
-            a.select("src", "dst", w) if has_w else a.select("src", "dst")
-        ).localCheckpoint(eager=True)
+        adds = pin(a.select("src", "dst", w) if has_w else a.select("src", "dst"))
 
     cols = ["src", "dst"] + (["weight"] if has_w else [])
     merged = base_edges.select(*cols)
@@ -349,7 +347,7 @@ def _merge_edges(
         )
     if adds is not None:
         merged = merged.unionByName(adds)
-    merged = merged.localCheckpoint(eager=True)
+    merged = pin(merged)
 
     topo_changed = bool(ops & {"add", "del", "delv"})
     carried: list[tuple] = []
@@ -370,7 +368,7 @@ def _merge_edges(
         # broadcast-semi scan of the merged table, delta-sized output;
         # usually empty, keeping the common all-copies-gone del on the
         # thunk's zero-shuffle anti-join path.
-        present = (
+        present = pin(
             merged.select("src", "dst")
             .join(
                 F.broadcast(_doubled(dels, False).dropDuplicates(["src", "dst"])),
@@ -378,7 +376,6 @@ def _merge_edges(
                 "left_semi",
             )
             .dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
         )
         mcache.pinned_ids.update(_pinned_rdd_ids(present))
         if present.take(1):

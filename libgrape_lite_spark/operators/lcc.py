@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from libgrape_lite_spark.plans.kernels import graph_op
+from libgrape_lite_spark.transients import pin, register
 
 
 @graph_op
@@ -86,10 +87,16 @@ def triangle_counts(
         ranked = ranked.where(
             (F.col("sdeg") <= degree_threshold) & (F.col("ddeg") <= degree_threshold)
         )
-    oriented = ranked.where(
-        (F.col("sdeg") < F.col("ddeg"))
-        | ((F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst")))
-    ).select("src", "dst").localCheckpoint(eager=True)
+    # registered: the returned triangle counts read it lazily, and the
+    # caller's release_transients() frees it once they are consumed
+    oriented = register(
+        pin(
+            ranked.where(
+                (F.col("sdeg") < F.col("ddeg"))
+                | ((F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst")))
+            ).select("src", "dst")
+        )
+    )
 
     if impl == "intersect":
         adj_list = oriented.groupBy("src").agg(

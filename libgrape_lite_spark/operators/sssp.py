@@ -32,7 +32,7 @@ def sssp(
     directed: bool = False,
     driver: IterationDriver | None = None,
     max_rounds: int | None = None,
-    impl: str = "dataframe",
+    impl: str | None = None,
     num_fragments: int | None = None,
 ) -> DataFrame:
     """Returns DataFrame(id: long, dist: double); unreached = +inf.
@@ -44,12 +44,17 @@ def sssp(
     partitioned fragments run a LOCAL Bellman-Ford fixpoint per superstep
     (plans/kernels.py:local_relax_fixpoint); a shortest path confined to a
     fragment settles in one superstep, so global rounds count only the
-    cross-fragment hops. ``"dataframe"`` (default) is the frontier push —
-    better when frontiers are tiny relative to fragments. Paired runs on
-    4 cores (BENCH/runs/wcc_sssp_ab_1792300951.json): undirected, the
-    push tied at sf0.01 (5/10) and won 8/10 at sf0.1; directed, ``auto``
-    won 10/10 at both scales, ~8× faster.
+    cross-fragment hops. ``"dataframe"`` is the frontier push — better
+    when frontiers are tiny relative to fragments. The default
+    (``impl=None``) follows ``directed``: ``"auto"`` on a directed graph,
+    ``"dataframe"`` otherwise. Paired runs on 4 cores
+    (BENCH/runs/wcc_sssp_ab_1792300951.json): undirected, the push tied
+    at sf0.01 (5/10) and won 8/10 at sf0.1; directed, ``auto`` won 10/10
+    at both scales (1.73 s vs 14.67 s median at sf0.01, 1.78 s vs 13.89 s
+    at sf0.1).
     """
+    if impl is None:
+        impl = "auto" if directed else "dataframe"
     if impl not in ("dataframe", "auto"):
         raise ValueError(f"impl must be dataframe|auto, got {impl!r}")
     spark = vertices.sparkSession
@@ -83,8 +88,13 @@ def sssp(
 
 
 def _source_state(spark, source: int) -> DataFrame:
-    return spark.createDataFrame(
-        [(source, 0.0, True)], "id long, dist double, improved boolean"
+    """The step-0 state: the source at distance 0, improved. A one-row
+    ``Range`` with literal columns — a JVM-side plan, so the first job of
+    every sssp/bfs call scans no Python RDD."""
+    return spark.range(1).select(
+        F.lit(source).cast("long").alias("id"),
+        F.lit(0.0).alias("dist"),
+        F.lit(True).alias("improved"),
     )
 
 

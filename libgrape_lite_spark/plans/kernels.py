@@ -21,7 +21,11 @@ every app reads. The push and gather layouts are narrow views of it;
 the PIE fragment table, the degree table and — directed graphs only —
 the by-dst copy are built from it. All are built once per edge table,
 memoized on it (:func:`cached_prepared`, :func:`prepare_graph`) and
-released together.
+released together. Each is pinned serialized through
+:func:`libgrape_lite_spark.transients.pin`, the engine's one pinning
+primitive: a pinned table is compressed bytes per partition, the Spark
+shape of the reference's packed CSR arrays (immutable_csr.h), not one
+JVM object per row.
 """
 
 from __future__ import annotations
@@ -34,6 +38,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from libgrape_lite_spark.transients import pin
 
 
 def partition_edges(edges: DataFrame, num_fragments: int, key: str = "src") -> DataFrame:
@@ -563,31 +569,26 @@ def adjacency_table(edges: DataFrame, directed: bool = False) -> DataFrame:
 
     The doubled edge table (unless directed) reduced by
     :func:`pair_aggregate` to ``(src, dst, weight, cnt)``,
-    hash-partitioned and sorted by ``src`` and pinned serialized
-    (MEMORY_AND_DISK): packing byte arrays instead of per-row objects cuts
-    executor GC on the table every superstep scans (event-log measured:
-    GC was 22% of task time on a deserialized layout). Sorted at build so
-    the per-round sort-merge join against the state keeps only its
-    vertex-sized sort; localCheckpoint preserves outputOrdering (r8,
-    guide §2.4). Every other edge layout is a view of it or is built
+    hash-partitioned and sorted by ``src`` and pinned (serialized, like
+    every engine table — :func:`~libgrape_lite_spark.transients.pin`).
+    Sorted at build so the per-round sort-merge join against the state
+    keeps only its vertex-sized sort; localCheckpoint preserves
+    outputOrdering (r8, guide §2.4). Every other edge layout is a view of it or is built
     from it (:func:`push_adjacency_table`, :func:`gather_adjacency_table`,
     :func:`pie_fragment_table`, :func:`cached_degree_table`), so one
     E-sized table and one shuffle serve every operator on the graph."""
 
     def build() -> DataFrame:
-        from pyspark.storagelevel import StorageLevel
-
         from libgrape_lite_spark.functions.edges import undirected as _undirected
 
         w = (F.col("weight") if "weight" in edges.columns else F.lit(1.0)).alias(
             "weight"
         )
         e = edges.select("src", "dst", w)
-        return (
+        return pin(
             pair_aggregate(e if directed else _undirected(e))
             .repartition("src")
             .sortWithinPartitions("src")
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
         )
 
     return cached_prepared(edges, ("adj", directed), build)
@@ -631,11 +632,7 @@ def gather_adjacency_table(
         )
 
     def build() -> DataFrame:
-        return (
-            adj.repartition("dst")
-            .sortWithinPartitions("dst")
-            .localCheckpoint(eager=True)
-        )
+        return pin(adj.repartition("dst").sortWithinPartitions("dst"))
 
     return cached_prepared(edges, ("by_dst", True), build)
 
@@ -660,7 +657,7 @@ def cached_degree_table(
     from libgrape_lite_spark.functions.edges import out_degrees
 
     # degree job runs outside the lock (prepare_graph builds concurrently)
-    built = (vertices, out_degrees(adj, vertices).localCheckpoint(eager=True))
+    built = (vertices, pin(out_degrees(adj, vertices)))
     with _PREP_LOCK:
         ent = cache.get(key)
         if ent is not None and ent[0] is vertices:
@@ -734,7 +731,12 @@ def pie_fragment_table(
     edges: DataFrame, num_fragments: int, bounds: list[int], directed: bool = False
 ) -> DataFrame:
     """The PIE kernels' shared fragment table: (src, dst, weight, part),
-    range-partitioned by :func:`segment_part_bounds` and pinned.
+    range-partitioned by :func:`segment_part_bounds` and pinned serialized
+    — it holds the adjacency's pairs, and at sf0.01 took 3.9 MB as
+    deserialized rows against 0.36 MB for the serialized adjacency. The
+    price is a decode on every superstep that reads it: wcc at sf0.1 ran
+    4.52 → 5.25 s median in a paired A/B
+    (BENCH/runs/pin_ab_1792388760.json).
 
     Built from the :func:`adjacency_table` — already one row per pair at
     its min weight, the only weight that can ever win a relaxation and
@@ -747,13 +749,12 @@ def pie_fragment_table(
     def build() -> DataFrame:
         # sorted by part once at build → per-round cogroup sort elided
         # (see partition_edges)
-        return (
+        return pin(
             adjacency_table(edges, directed)
             .select("src", "dst", "weight")
             .withColumn("part", segment_part_bounds("src", bounds))
             .repartition(num_fragments, "part")
             .sortWithinPartitions("part")
-            .localCheckpoint(eager=True)
         )
 
     return cached_prepared(

@@ -19,8 +19,10 @@ Two scale-critical responsibilities the reference gets for free from
 mutable arrays but Spark does not:
 
 1. **Lineage truncation** (SURVEY.md §4.13): every materialized superstep
-   state is persisted and its plan cut (localCheckpoint), otherwise the
-   logical plan doubles per iteration and the driver OOMs around step ~30.
+   state is pinned and its plan cut (:func:`libgrape_lite_spark.transients.pin`,
+   a serialized localCheckpoint — the one storage level of every engine
+   table), otherwise the logical plan doubles per iteration and the
+   driver OOMs around step ~30.
 2. **Resumability** (north rule): every ``checkpoint_every`` supersteps the
    state DataFrame is written to ``<checkpoint_dir>/<run>/step=<k>`` as
    parquet (stand-in for an Iceberg table — same layout, transactional
@@ -39,6 +41,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from libgrape_lite_spark.transients import pin, register
+
 
 @dataclass
 class SuperstepMetric:
@@ -51,7 +55,9 @@ class SuperstepMetric:
 
 class IterationDriver:
     """Owns the superstep loop: materialization, termination, resume,
-    checkpoints, metrics.
+    checkpoints, metrics. Every state it materializes is pinned serialized
+    (:func:`~libgrape_lite_spark.transients.pin`); there is no storage
+    knob.
 
     Usage inside an operator::
 
@@ -72,22 +78,13 @@ class IterationDriver:
         checkpoint_every: int = 5,
         metrics_path: str | None = None,
         verbose: bool = False,
-        storage_level=None,
     ) -> None:
-        """``storage_level``: StorageLevel for the per-superstep
-        localCheckpoints. None = Spark's default (deserialized rows).
-        ``StorageLevel.MEMORY_AND_DISK`` (serialized) packs each cached
-        partition into few byte arrays instead of one object per row —
-        measured to cut executor GC substantially on big states (the
-        right choice for low-core executors, where GC threads share the
-        task's pinned CPUs)."""
         self.spark = spark
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
         self.metrics_path = metrics_path
         self.verbose = verbose
-        self.storage_level = storage_level
         self.metrics: list[SuperstepMetric] = []
         # one-time setup decisions operators record for observability
         # (e.g. pagerank's auto hub-salt verdict) — kept out of `metrics`
@@ -150,16 +147,14 @@ class IterationDriver:
 
     # -- state materialization -------------------------------------------
     def materialize(self, df: DataFrame, step: int) -> DataFrame:
-        """Persist + cut lineage; optionally commit a resumable checkpoint.
+        """Pin + cut lineage; optionally commit a resumable checkpoint.
 
-        ``localCheckpoint(eager=True)`` stores the partitions on executors
-        and truncates the logical plan. On a real cluster with unreliable
-        executors, the parquet checkpoint below is the durable copy.
+        :func:`~libgrape_lite_spark.transients.pin` stores the partitions
+        on executors as serialized bytes and truncates the logical plan.
+        On a real cluster with unreliable executors, the parquet
+        checkpoint below is the durable copy.
         """
-        if self.storage_level is not None:
-            out = df.localCheckpoint(eager=True, storageLevel=self.storage_level)
-        else:
-            out = df.localCheckpoint(eager=True)
+        out = pin(df)
         self._gc(keep=out)
         if self.checkpoint_dir and step % self.checkpoint_every == 0:
             self._commit_checkpoint(out, step)
@@ -270,10 +265,8 @@ class IterationDriver:
         reads it), so it is freed by the caller's release_transients() /
         transient_scope() once the result is consumed — the same lifecycle
         as the pipeline operators' internal checkpoints."""
-        from libgrape_lite_spark import transients
-
         for df, _ids in self._persisted:
-            transients.register(df)
+            register(df)
         self._persisted = []
         if not self.metrics_path or not self.metrics:
             return

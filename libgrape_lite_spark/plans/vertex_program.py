@@ -37,7 +37,7 @@ from libgrape_lite_spark.functions.edges import undirected
 from libgrape_lite_spark.plans.kernels import release_pinned
 from libgrape_lite_spark.plans.superstep import IterationDriver
 from libgrape_lite_spark.session import static_plans
-from libgrape_lite_spark.transients import transient_checkpoint
+from libgrape_lite_spark.transients import pin, register
 
 _MERGE = {"min": F.min, "max": F.max, "sum": F.sum, "count": F.count}
 
@@ -109,7 +109,7 @@ def run_vertex_program(
         # parallel edges as rows), pinned as a transient: the caller's
         # release_transients() frees it once the result is consumed
         adj = edges if program.directed else undirected(edges)
-        adj = transient_checkpoint(adj.repartition("src"))
+        adj = register(pin(adj.repartition("src")))
 
         def init() -> DataFrame:
             state = program.init(vertices, edges)
@@ -199,7 +199,7 @@ def _apply_mutation(
     # re-partition + re-pin the mutated adjacency once (same contract as the
     # initial PrepareToRunApp step)
     if mut.add_edges is not None or mut.remove_edges is not None or mut.remove_vertices is not None:
-        adj = transient_checkpoint(adj.repartition("src"))
+        adj = register(pin(adj.repartition("src")))
     if mut.add_vertices is not None:
         init_new = program.init(mut.add_vertices.select("id"), adj)
         if "changed" not in init_new.columns:

@@ -131,14 +131,12 @@ def main() -> None:
     # rounds from the driver's own per-round metrics, and report the
     # one-time in-operator setup (adjacency doubling + repartition + pin,
     # degree init — O(E), amortized over a job's whole run at scale) as a
-    # separate number. Serialized checkpoint storage: GC on pinned
-    # low-core executors was measured at 22-50% of round time with
-    # per-row object caching.
-    from pyspark.storagelevel import StorageLevel
-
+    # separate number. Superstep states are pinned serialized (GC on
+    # pinned low-core executors was measured at 22-50% of round time with
+    # per-row object caching).
     from libgrape_lite_spark.plans.superstep import IterationDriver
 
-    drv = IterationDriver(spark, storage_level=StorageLevel.MEMORY_AND_DISK)
+    drv = IterationDriver(spark)
     t0 = time.time()
     pagerank(vertices, edges, max_rounds=PR_ROUNDS, driver=drv).count()
     total = time.time() - t0

@@ -83,7 +83,24 @@ def test_sssp_auto_equals_dataframe(spark):
            sssp(v, e, source=0, impl="auto", num_fragments=4).collect()}
     assert got == want
     # directed variant too
-    want_d = {r["id"]: r["dist"] for r in sssp(v, e, source=0, directed=True).collect()}
+    want_d = {r["id"]: r["dist"] for r in
+              sssp(v, e, source=0, directed=True, impl="dataframe").collect()}
     got_d = {r["id"]: r["dist"] for r in
              sssp(v, e, source=0, directed=True, impl="auto", num_fragments=4).collect()}
     assert got_d == want_d
+
+
+@pytest.mark.parametrize("directed, op", [(True, "sssp_auto"), (False, "sssp")])
+def test_sssp_default_follows_directed(spark, directed, op):
+    """impl=None runs the PIE auto loop on a directed graph and the
+    frontier push otherwise; the loop's per-round log names which ran."""
+    from libgrape_lite_spark.operators import sssp
+    from libgrape_lite_spark.plans.superstep import IterationDriver
+
+    v = make_vertices(spark, range(4))
+    e = make_edges(spark, [(0, 1), (1, 2), (2, 3)])
+    drv = IterationDriver(spark)
+    out = sssp(v, e, source=0, directed=directed, driver=drv)
+    dist = {r["id"]: r["dist"] for r in out.collect()}
+    assert dist == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
+    assert {m.extra["op"] for m in drv.metrics} == {op}
